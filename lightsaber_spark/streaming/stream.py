@@ -173,12 +173,17 @@ def streaming_theta_join(
     residuals cost hash lookups, not in-bucket scans. The throughput
     lever is STATE PARTITIONS: the join runs four state-store
     instances per partition (2 sides × KeyToNumValues +
-    KeyWithIndexToValue), each fsyncing a commit every batch — on a
-    single local disk per-store commit degrades superlinearly with
-    instance count (36→350 ms/store from 4→32 partitions), so set
-    ``spark.sql.shuffle.partitions`` for the query to what one node's
-    disk sustains (8 on the dev VM: 0.55M→1.34M rows/s at 800K
-    rows/side/batch). On RocksDB,
+    KeyWithIndexToValue), each writing checkpoint files every batch.
+    Round 7 measured per-store commit growing with instance count
+    (36→350 ms/store from 4→32 partitions) and picked 8 partitions
+    (0.55M→1.34M rows/s at 800K rows/side/batch). The cost was not
+    disk fsync but process spawns: without Hadoop's native library the
+    default FileContext checkpoint manager forks ``chmod`` and
+    ``readlink`` for every checkpoint file. Local sessions now use the
+    FileSystem-based manager (``session.use_local_checkpoint_manager``),
+    so that sweet spot was measured before the change and should be
+    re-measured before it sizes ``spark.sql.shuffle.partitions``. On
+    RocksDB,
     ``spark.sql.streaming.join.stateFormatVersion=3`` collapses the
     four instances into one column-family store (measured 1.05M rows/s
     at 32 partitions with changelog checkpointing).

@@ -97,14 +97,16 @@ def main() -> None:
     ap.add_argument("--rows-per-batch", type=int, default=1_000_000)
     ap.add_argument("--join-parts", type=int, default=8,
                     help="state partitions for the stream-stream join "
-                         "shape (sized to this node's single disk; see "
-                         "the shape comment)")
+                         "shape (the round-7 optimum, measured before "
+                         "local sessions switched checkpoint manager; "
+                         "see the shape comment)")
     ap.add_argument("--dense-join-parts", type=int, default=16,
                     help="state partitions for the DENSE join shape — "
                          "its optimum differs from the sparse shape's "
-                         "(state-churn parallelism vs commit queueing; "
-                         "measured round 8: 16 for hdfs, 32 for rocksdb"
-                         "+changelog)")
+                         "(state-churn parallelism vs commit cost; "
+                         "measured round 8, before local sessions "
+                         "switched checkpoint manager: 16 for hdfs, 32 "
+                         "for rocksdb+changelog)")
     ap.add_argument("--batches", type=int, default=12)
     ap.add_argument("--write", default=None)
     ap.add_argument("--rocksdb", action="store_true",
@@ -360,14 +362,16 @@ def main() -> None:
         ), args.rows_per_batch),
         # stream-stream theta join (band-bucketized symmetric hash join
         # + residual predicate) — rows/s counts BOTH input sides. State
-        # partitions sized to the node (--join-parts): a stream-stream
-        # join runs FOUR state-store instances per partition (2 sides x
-        # 2 internal stores), each fsyncing a commit per batch; on one
-        # local disk the per-store commit degrades superlinearly with
-        # instance count (measured 36/57/146/350 ms per store at
-        # 4/8/16/32 partitions), so 32 partitions spend the whole batch
-        # in commit. On a real cluster the instances spread across
-        # executors' disks — there, size state partitions to cores.
+        # partitions (--join-parts): a stream-stream join runs FOUR
+        # state-store instances per partition (2 sides x 2 internal
+        # stores), each writing checkpoint files every batch. Round 7
+        # measured per-store commit at 36/57/146/350 ms for 4/8/16/32
+        # partitions and picked 8. The cause was not the disk: without
+        # Hadoop's native library the default FileContext checkpoint
+        # manager forked chmod/readlink processes for every checkpoint
+        # file. Local sessions now use the FileSystem-based manager
+        # (session.use_local_checkpoint_manager), so that optimum was
+        # measured before the change and needs re-measuring.
         "theta_join_band_5s": (theta_shape, theta_rows_per_batch,
                                {"spark.sql.shuffle.partitions":
                                 str(args.join_parts)}),
@@ -377,12 +381,13 @@ def main() -> None:
         # is exact value equality (values are unique per batch per
         # side), so each row joins its one twin: output stays ~n while
         # state insert/evict churn is the full 2n per batch.
-        # Partitioning: unlike the sparse shape (commit-queueing-bound,
-        # optimum 8 on one disk), dense is bound by the PER-PARTITION
+        # Partitioning: unlike the sparse shape (commit-bound in round
+        # 7, optimum 8), dense is bound by the PER-PARTITION
         # single-threaded state update+eviction walk, so it wants MORE
         # partitions — measured optimum 16 (hdfs) / 32 (rocksdb WITH
         # changelog checkpointing, which turns the 32 commits into
-        # cheap appends); see STREAM_BENCH.md round-8 section.
+        # cheap appends); see STREAM_BENCH.md round-8 section. Both
+        # optima predate the FileSystem-based local checkpoint manager.
         "theta_join_band_5s_dense": (
             lambda: theta_shape(15_000, modulus=1 << 62),
             theta_rows_per_batch,
@@ -486,16 +491,22 @@ def main() -> None:
             "bound: the shape now feeds `--rows-per-batch` per side.",
             "2. **State-store instance count**: a stream-stream join "
             "runs FOUR state-store instances per partition (2 sides × "
-            "KeyToNumValues + KeyWithIndexToValue); each commits "
-            "(fsync) every batch. Measured per-store commit on this "
-            "node's single disk: 36 / 57 / 146 / 350 ms at 4 / 8 / 16 / "
-            "32 partitions — superlinear queueing, so 32 partitions × "
-            "4 instances spend the whole batch in commit (44.8 s summed "
-            "commit per batch). The shape now runs at `--join-parts` "
-            "(default 8) state partitions, the measured sweet spot for "
-            "one disk (0.55 M → 1.34 M rows/s at 800 K rows/side). On a "
-            "real cluster the instances spread across executors' disks; "
-            "size state partitions to cores there. RocksDB alternative: "
+            "KeyToNumValues + KeyWithIndexToValue); each writes "
+            "checkpoint files every batch. Measured per-store commit in "
+            "round 7: 36 / 57 / 146 / 350 ms at 4 / 8 / 16 / 32 "
+            "partitions, so 32 partitions × 4 instances spent the whole "
+            "batch in commit (44.8 s summed commit per batch). Round 7 "
+            "blamed fsync on one local disk; the real cause was process "
+            "spawns. Without Hadoop's native library, Spark's default "
+            "FileContext checkpoint manager forks `chmod` and `readlink` "
+            "processes for every checkpoint file (about 95 forks per "
+            "micro-batch for one 4-partition aggregate). Local sessions "
+            "now use the FileSystem-based manager, which forks no "
+            "`readlink` (`session.use_local_checkpoint_manager`). The "
+            "shape runs at `--join-parts` (default 8) state partitions, "
+            "the round-7 sweet spot (0.55 M → 1.34 M rows/s at 800 K "
+            "rows/side), measured BEFORE that change. RocksDB "
+            "alternative: "
             "`spark.sql.streaming.join.stateFormatVersion=3` collapses "
             "the 4 instances into one column-family store (measured "
             "1.05 M rows/s at 32 partitions with changelog "
@@ -509,14 +520,15 @@ def main() -> None:
             "state and joins its one twin) measures the full "
             "state-insert path instead; both are reported below. The "
             "`--join-parts` optimum also shifts with batch size: 8 "
-            "partitions is commit-floor-optimal at the 1 M-rows/side "
+            "partitions was commit-floor-optimal at the 1 M-rows/side "
             "operating point but shuffle/memory-bound at 8 M rows/side "
-            "(the 16 M-rows/batch sweep row) — on one node the two "
-            "costs trade against the same disk, on a cluster they "
-            "don't.",
+            "(the 16 M-rows/batch sweep row); both readings predate the "
+            "FileSystem-based local checkpoint manager.",
             "",
             "Round-8 dense findings (full matrix in the round-8 "
-            "section when present): the DENSE shape is bound by the "
+            "section when present; measured before the FileSystem-"
+            "based local checkpoint manager): the DENSE shape is bound "
+            "by the "
             "per-partition single-threaded state walk, not commit, so "
             "it runs at `--dense-join-parts` (16 hdfs / 32 rocksdb "
             "with changelog checkpointing — 3.6-3.9x the r7 row at "

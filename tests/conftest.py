@@ -19,6 +19,12 @@ def spark():
     # 256 s / local[8] 182 s / local[4] 236 s. The bench keeps the
     # driver's local[$SPARK_GRAFT_CPUS] contract — this pins only the
     # correctness suite's parallelism.
+    # get_spark's 24g driver default is for the bench host. One session
+    # serves the whole suite, and with a heap cap above physical memory
+    # the JVM grows past the RAM of a 16 GB host (measured 14.8 GB RSS)
+    # until the kernel OOM-kills it and every later test fails. 6g
+    # holds the suite's live data at test scale.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
     s = get_spark(
         app_name="lightsaber-tests", shuffle_partitions=8, master="local[8]"
     )
