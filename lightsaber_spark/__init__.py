@@ -3,12 +3,10 @@ data-processing capabilities of lsds/LightSaber (+Scabbard).
 
 The reference (/root/reference) is a single-node C++ stream engine that
 JIT-compiles fused window-aggregation kernels (SURVEY.md). This package
-re-expresses that capability surface Spark-first:
+re-expresses that capability surface Spark-first: queries call the
+operator functions below directly on DataFrames, and Catalyst + Tungsten
+replace OperatorKernel/OperatorJit.
 
-- ``lightsaber_spark.dsl`` — a reference-shaped query DSL (TupleSchema,
-  WindowDefinition, Selection/Projection/Aggregation/ThetaJoin/
-  StaticHashJoin, Query/QueryApplication) that *compiles to DataFrame
-  plans*; Catalyst + Tungsten replace OperatorKernel/OperatorJit.
 - ``lightsaber_spark.operators`` — windowed aggregation (tumbling /
   sliding / session / count-based, pane-optimized), gap fill, theta &
   as-of joins, top-k post-window ops.

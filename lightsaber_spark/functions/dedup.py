@@ -297,14 +297,6 @@ def release_shingle_caches() -> int:
     return n
 
 
-def _shingle_index(
-    df: DataFrame, text_col: str, id_col: str, k: int, max_doc_freq: int | None
-) -> DataFrame:
-    """Exploded (id, shingle) inverted index with optional stop-shingle
-    removal (doc-frequency cutoff — the scalability valve)."""
-    return _index_from_arrays(shingle_arrays(df, text_col, id_col, k), max_doc_freq)
-
-
 def _index_from_arrays(arr: DataFrame, max_doc_freq: int | None) -> DataFrame:
     ex = arr.select("_id", F.explode("_shs").alias("_sh"))
     if max_doc_freq is not None:

@@ -324,44 +324,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(
-    vec: Column, n_planes: int = 8, dim: int = 64, salt: str = "lsh", scaled: bool = False
-) -> Column:
-    """Deterministic random-hyperplane signature (bigint bucket id).
-
-    Plane p's weight for dimension i is ±1 derived from md5(salt_p_i) —
-    reproducible in any engine, no stored plane matrix. Sign of the
-    integer-scaled dot product gives bit p. ``scaled=True`` means the
-    vector is already integer-scaled (via :func:`scaled_vec`)."""
-    # NB: the per-plane lambda must stay single-argument — F.transform
-    # treats a second parameter as the array index and would shadow `p`
-    def _term_fn(p: int):
-        prefix = f"{salt}_{p}_"
-
-        def body(i):
-            e = F.element_at(vec, i + 1)
-            elem = e if scaled else F.round(e.cast("double") * SCALE).cast("bigint")
-            sign = (
-                F.conv(
-                    F.substring(F.md5(F.concat(F.lit(prefix), i.cast("string"))), 1, 15),
-                    16, 10,
-                ).cast("bigint") % 2 * 2 - 1
-            )
-            return elem * sign
-
-        return body
-
-    bits = []
-    for p in range(n_planes):
-        terms = F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), _term_fn(p))
-        dot = F.aggregate(terms, F.lit(0).cast("bigint"), lambda acc, v: acc + v)
-        bits.append(F.when(dot > 0, F.lit(1 << p).cast("bigint")).otherwise(F.lit(0).cast("bigint")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def _plane_matrix(n_planes: int, dim: int, salt: str):
     """±1 plane weights, identical to the expression/oracle derivation:
     sign(p, i) = md5('{salt}_{p}_{i}')[:15 hex] % 2 * 2 - 1."""

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Streaming throughput smoke: measured tuples/s through the streaming
-engine on local[32], using the repo's own instrumentation
-(`monitoring.ThroughputListener` — the reference's [MON] analog) over
-the bounded-batch rate source (`rate_micro_batch_source` — the
-ring-buffer-ingest analog).
+engine on ``get_spark``'s master (``local[$SPARK_GRAFT_CPUS]``), using
+the repo's own instrumentation (`monitoring.ThroughputListener` — the
+reference's [MON] analog) over the bounded-batch rate source
+(`rate_micro_batch_source` — the ring-buffer-ingest analog).
 
 The reference's benchmarks are throughput-based (tuples/s per node);
 BASELINE.md records no absolute numbers, so this artifact documents
@@ -11,8 +11,11 @@ OUR side with honest context: JVM + Python driver, micro-batch
 scheduling overhead included, state-store windowed aggregation — not a
 cache-resident C++ JIT loop. The interesting property is the SHAPE:
 per-batch cost should be dominated by rows (throughput roughly flat as
-rows/batch grows), and grouped windowed aggregation should sustain
-millions of tuples/s on 32 cores.
+rows/batch grows).
+
+Every run appends one record, carrying the Spark master and its
+default parallelism, to the list in STREAM_BENCH.json; ``--write``
+appends one table to a markdown file. Neither file is ever rewritten.
 
 Usage: python scripts/stream_bench.py [--rows-per-batch 1000000]
        [--batches 12] [--write STREAM_BENCH.md]
@@ -92,6 +95,57 @@ def _measure(
     return out
 
 
+_MD_PREAMBLE = """\
+# Streaming throughput smoke (generated by scripts/stream_bench.py — do not edit)
+
+`rate-micro-batch` source with 32 partitions; steady-state batches only
+(first two dropped); measured by the repo's own `ThroughputListener`
+(the reference's [MON] analog, `Measurement.cpp:42-54`). JVM
+micro-batch engine with state-store windowed aggregation — scheduling
+overhead included, not a cache-resident C++ JIT loop. Each run appends
+one table headed by the Spark master it ran on.
+"""
+
+
+def append_run(record: dict, json_path: str, md_path: str | None = None) -> None:
+    """Append one run: ``record`` joins the JSON list at ``json_path``
+    and, when ``md_path`` is given, its per-shape table is appended to
+    that markdown file, after the preamble only if the file is new.
+    Existing records and rows are never rewritten."""
+    runs = []
+    if os.path.exists(json_path):
+        with open(json_path) as f:
+            runs = json.load(f)
+    runs.append(record)
+    tmp = json_path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(runs, f)
+    # replace, never truncate in place: a crash mid-write must not cost
+    # the earlier runs
+    os.replace(tmp, json_path)
+    if md_path is None:
+        return
+    provider = record["provider"]
+    lines = [
+        "",
+        f"Run on `{record['master']}` (default parallelism "
+        f"{record['default_parallelism']}), {provider} state store:",
+        "",
+        "| shape | state store | rows/batch | steady rows/s | rows | steady secs |",
+        "|---|---|---|---|---|---|",
+    ]
+    for name, r in record["results"].items():
+        lines.append(
+            f"| {name} | {provider} | {r['rows_per_batch']:,} "
+            f"| {r['rows_per_sec']:,} | {r['rows']:,} | {r['secs']} |"
+        )
+    new = not os.path.exists(md_path)
+    with open(md_path, "a") as f:
+        if new:
+            f.write(_MD_PREAMBLE)
+        f.write("\n".join(lines) + "\n")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows-per-batch", type=int, default=1_000_000)
@@ -115,8 +169,6 @@ def main() -> None:
     ap.add_argument("--shapes", default=None,
                     help="comma-separated subset of shapes to run "
                          "(default: all) — used by the batch-size sweep")
-    ap.add_argument("--append", action="store_true",
-                    help="append rows to --write instead of rewriting")
     ap.add_argument("--conf", action="append", default=[],
                     help="extra spark conf as key=value (repeatable) — "
                          "e.g. spark.sql.streaming.join.stateFormatVersion=3")
@@ -437,120 +489,17 @@ def main() -> None:
             f"-> {r['rows_per_sec']:>10} rows/s"
         )
 
-    provider = "rocksdb" if args.rocksdb else "hdfs-backed"
-    payload = {
+    sc = spark.sparkContext
+    record = {
         "rows_per_batch": args.rows_per_batch,
-        "cores": 32,
-        "provider": provider,
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "provider": "rocksdb" if args.rocksdb else "hdfs-backed",
         "results": results,
     }
-    if args.append and os.path.exists("STREAM_BENCH.json"):
-        with open("STREAM_BENCH.json") as f:
-            prior = json.load(f)
-        prior = prior if isinstance(prior, list) else [prior]
-        prior.append(payload)
-        payload = prior
-    with open("STREAM_BENCH.json", "w") as f:
-        json.dump(payload, f)
+    append_run(record, "STREAM_BENCH.json", args.write)
     if args.write:
-        lines = [] if args.append else [
-            "# Streaming throughput smoke "
-            "(generated by scripts/stream_bench.py — do not edit)",
-            "",
-            "`rate-micro-batch` source, 32 partitions on local[32]; "
-            "steady-state batches only (first two dropped); measured by "
-            "the repo's own `ThroughputListener` (the reference's [MON] "
-            "analog, `Measurement.cpp:42-54`). Honest context: JVM "
-            "micro-batch engine with state-store windowed aggregation — "
-            "scheduling overhead included, not a cache-resident C++ JIT "
-            "loop; the reference publishes no absolute numbers in-repo "
-            "(BASELINE.md), so these document our absolute single-node "
-            "streaming rates. The rows/batch sweep shows the micro-batch "
-            "cost model directly: per-batch scheduling + state-commit "
-            "overhead is ~fixed, so throughput scales with batch size "
-            "(the throughput/latency trade micro-batching makes) — the "
-            "per-ROW cost of the windowed aggregation itself is the "
-            "8M-rows/batch row.",
-            "",
-            "## Stream-stream theta join: root cause of the round-5/6 "
-            "72-77 K rows/s readings",
-            "",
-            "Two compounding measurement artifacts, both fixed in round "
-            "7, plus one real tuning lever:",
-            "",
-            "1. **Batch size**: the shape fed `rows_per_batch // 10` "
-            "rows per side (a leftover guard from the pre-equi-key "
-            "nested-loop plan) AND the table reported the global "
-            "rows/batch for it, so the recorded point sat at 100 K "
-            "rows/side — entirely on the per-batch state-commit floor "
-            "(~2.8 s/batch at 32 partitions regardless of rows). "
-            "Catalyst extracts the equality conjunct of the theta "
-            "predicate into the symmetric-hash-join key (plan shows "
-            "`StreamingSymmetricHashJoin [_tj_bkt, (l_v % 1009)]`), so "
-            "full-size batches are row-ingest-bound, not pair-scan-"
-            "bound: the shape now feeds `--rows-per-batch` per side.",
-            "2. **State-store instance count**: a stream-stream join "
-            "runs FOUR state-store instances per partition (2 sides × "
-            "KeyToNumValues + KeyWithIndexToValue); each writes "
-            "checkpoint files every batch. Measured per-store commit in "
-            "round 7: 36 / 57 / 146 / 350 ms at 4 / 8 / 16 / 32 "
-            "partitions, so 32 partitions × 4 instances spent the whole "
-            "batch in commit (44.8 s summed commit per batch). Round 7 "
-            "blamed fsync on one local disk; the real cause was process "
-            "spawns. Without Hadoop's native library, Spark's default "
-            "FileContext checkpoint manager forks `chmod` and `readlink` "
-            "processes for every checkpoint file (about 95 forks per "
-            "micro-batch for one 4-partition aggregate). Local sessions "
-            "now use the FileSystem-based manager, which forks no "
-            "`readlink` (`session.use_local_checkpoint_manager`). The "
-            "shape runs at `--join-parts` (default 8) state partitions, "
-            "the round-7 sweet spot (0.55 M → 1.34 M rows/s at 800 K "
-            "rows/side), measured BEFORE that change. RocksDB "
-            "alternative: "
-            "`spark.sql.streaming.join.stateFormatVersion=3` collapses "
-            "the 4 instances into one column-family store (measured "
-            "1.05 M rows/s at 32 partitions with changelog "
-            "checkpointing).",
-            "",
-            "Also honest to note: this shape spreads event time over a "
-            "600 s domain against a 10 s watermark, so in steady state "
-            "~98 % of rows are dropped as late inside the join operator "
-            "(state updates ≈ 2 % of ingest). A dense variant (15 s "
-            "spread + exact-equality residual, so every row enters "
-            "state and joins its one twin) measures the full "
-            "state-insert path instead; both are reported below. The "
-            "`--join-parts` optimum also shifts with batch size: 8 "
-            "partitions was commit-floor-optimal at the 1 M-rows/side "
-            "operating point but shuffle/memory-bound at 8 M rows/side "
-            "(the 16 M-rows/batch sweep row); both readings predate the "
-            "FileSystem-based local checkpoint manager.",
-            "",
-            "Round-8 dense findings (full matrix in the round-8 "
-            "section when present; measured before the FileSystem-"
-            "based local checkpoint manager): the DENSE shape is bound "
-            "by the "
-            "per-partition single-threaded state walk, not commit, so "
-            "it runs at `--dense-join-parts` (16 hdfs / 32 rocksdb "
-            "with changelog checkpointing — 3.6-3.9x the r7 row at "
-            "the 8-12-batch protocol). Two caveats that protocol "
-            "hides: state doesn't reach insert/evict equilibrium "
-            "until ~batch 20 (33.6 M rows; sustained rocksdb rate "
-            "137.8 K rows/s), and the hdfs-backed store OOMs a 24 g "
-            "driver before batch ~15 at that state size — rocksdb is "
-            "the only sustainable store for dense state on one node.",
-            "",
-            "| shape | state store | rows/batch | steady rows/s | rows | steady secs |",
-            "|---|---|---|---|---|---|",
-        ]
-        for name, r in results.items():
-            lines.append(
-                f"| {name} | {provider} | {r['rows_per_batch']:,} "
-                f"| {r['rows_per_sec']:,} "
-                f"| {r['rows']:,} | {r['secs']} |"
-            )
-        with open(args.write, "a" if args.append else "w") as f:
-            f.write("\n".join(lines) + "\n")
-        print(f"wrote {args.write}")
+        print(f"appended to {args.write}")
     spark.stop()
 
 

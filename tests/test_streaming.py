@@ -149,38 +149,6 @@ def test_checkpoint_restart_exactly_once(spark, events_stream_src, tmp_path):
     assert n2 == n1
 
 
-def test_dsl_query_compiles_on_stream(spark, events, events_stream_src, tmp_path):
-    """The reference-shaped DSL is execution-agnostic: the same Query
-    object compiled against a streaming DataFrame runs as Structured
-    Streaming (the reference is a streaming engine end-to-end, so this
-    is the real parity claim for the DSL)."""
-    from lightsaber_spark.dsl import (
-        Aggregation, AggregationType, ColumnReference, ComparisonPredicate,
-        EQ, Query, Selection, StringConstant, WindowDefinition, WindowMeasure,
-    )
-
-    q = Query(0, [
-        Selection(ComparisonPredicate(EQ, ColumnReference("event_type"),
-                                      StringConstant("click"))),
-        Aggregation(
-            WindowDefinition(WindowMeasure.RANGE_BASED, 3600, 3600),
-            [AggregationType.SUM], [ColumnReference("value")],
-            [ColumnReference("user_id")], ts_column="ts",
-        ),
-    ])
-    stream = _stream(spark, events_stream_src).withWatermark("ts", "0 seconds")
-    got = run_available_now(
-        q.compile(stream), str(tmp_path / "ck"), "complete", table_name="t_dsl"
-    )
-    want = q.compile(events)
-    ok, msg = rows_match(
-        got.select("window_start", "user_id", "sum_value").collect(),
-        want.select("window_start", "user_id", "sum_value").collect(),
-        float_tol=1e-6,
-    )
-    assert ok, msg
-
-
 def test_watermark_drops_late_rows(spark, tmp_path):
     """The reference assumes in-order streams and has no late-data
     handling (README.md:16) — our 0s watermark encodes that: a row
