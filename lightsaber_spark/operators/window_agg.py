@@ -14,12 +14,12 @@ Spark-first design
   ``epoch_us``-based oracle, (c) avoids carrying a struct column
   through the shuffle. Semantics match ``F.window``: starts are
   epoch-aligned multiples of ``slide`` and row t ∈ window s iff
-  ``s <= t < s+size``. Event times must be >= epoch, but the shifted
-  operand ``t − size`` can still be negative for t < size, where
-  truncating division ≠ floor — every bucket/start site therefore uses
-  exact floor division (``pmod`` for the µs sites, ``-floor(-x)`` for
-  the pane path), so all strategies and the DuckDB oracle's ``//``
-  agree on the earliest windows too.
+  ``s <= t < s+size``. Pre-epoch event times and the shifted operand
+  ``t − size`` (negative for t < size) are negative, where truncating
+  division ≠ floor — every bucket/start site therefore uses exact floor
+  division (``pmod`` for the µs sites, ``floor`` for the pane path), so
+  all strategies agree with a floor-division reference on the earliest
+  windows and before 1970 too.
 * Tumbling: one hash aggregation, map-side combinable.
 * Short sliding windows: per-row expansion to the size/slide containing
   window starts (``explode(sequence(...))``) then one aggregation —
@@ -137,6 +137,7 @@ def windowed_agg(
     prefix_panes_per_chunk: int | None = None,
     prefix_spine_attach: str = "join",
     float32_output: bool = False,
+    emit_every: int | None = None,
 ) -> DataFrame:
     """Event-time (RANGE_BASED) windowed aggregation.
 
@@ -145,6 +146,13 @@ def windowed_agg(
     emitted (gap fill is opt-in, :func:`window_spine`).
 
     Physical strategy ladder (auto-selected):
+    - ``emit_every=M`` (a multiple of slide) → only starts ``% M == 0``
+      are emitted, so the ladder below runs at slide
+      step = gcd(size, M) (the declared slide if that gcd is not a
+      multiple of it) and keeps ``window_start % M == 0`` when
+      step != M — the reference's gcd slicing (``WindowDefinition.h:80-90``)
+      applied to the emitted windows: window(3600, 1) emitting every
+      60th start computes window(3600, 60), 60× fewer windows.
     - tumbling → one hash aggregation.
     - sliding, ratio < ``pane_threshold`` → per-row expansion.
     - sliding, ratio >= ``pane_threshold`` → pane decomposition
@@ -169,32 +177,42 @@ def windowed_agg(
     if slide_sec > size_sec:
         raise ValueError("slide > size (hopping-with-gaps) not in reference semantics")
     keys = list(keys)
-
+    if emit_every is not None:
+        if emit_every <= 0 or emit_every % slide_sec:
+            raise ValueError(
+                f"emit_every must be a positive multiple of slide {slide_sec}, "
+                f"got {emit_every}"
+            )
+        step = math.gcd(size_sec, emit_every)
+        if step % slide_sec == 0:
+            slide_sec = step
     if slide_sec == size_sec:
         out = _tumbling(df, ts_col, size_sec, aggs, keys)
-        return _cast_outputs(out, aggs, float32_output)
-    ratio = size_sec / slide_sec
-    prefix_ok = (
-        not keys
-        and size_sec % slide_sec == 0
-        and all(f in _INVERTIBLE or f in ("min", "max") for f, _c, _a in aggs)
-    )
-    if use_prefix is None:
-        use_prefix = prefix_ok and ratio >= prefix_threshold
-    elif use_prefix and not prefix_ok:
-        raise ValueError(
-            "prefix path needs global (no keys), invertible aggs, slide | size"
-        )
-    if use_prefix:
-        out = _sliding_prefix(
-            df, ts_col, size_sec, slide_sec, aggs,
-            panes_per_chunk=prefix_panes_per_chunk,
-            spine_attach=prefix_spine_attach,
-        )
-    elif use_panes if use_panes is not None else ratio >= pane_threshold:
-        out = _sliding_panes(df, ts_col, size_sec, slide_sec, aggs, keys)
     else:
-        out = _sliding_native(df, ts_col, size_sec, slide_sec, aggs, keys)
+        ratio = size_sec / slide_sec
+        prefix_ok = (
+            not keys
+            and size_sec % slide_sec == 0
+            and all(f in _INVERTIBLE or f in ("min", "max") for f, _c, _a in aggs)
+        )
+        if use_prefix is None:
+            use_prefix = prefix_ok and ratio >= prefix_threshold
+        elif use_prefix and not prefix_ok:
+            raise ValueError(
+                "prefix path needs global (no keys), invertible aggs, slide | size"
+            )
+        if use_prefix:
+            out = _sliding_prefix(
+                df, ts_col, size_sec, slide_sec, aggs,
+                panes_per_chunk=prefix_panes_per_chunk,
+                spine_attach=prefix_spine_attach,
+            )
+        elif use_panes if use_panes is not None else ratio >= pane_threshold:
+            out = _sliding_panes(df, ts_col, size_sec, slide_sec, aggs, keys)
+        else:
+            out = _sliding_native(df, ts_col, size_sec, slide_sec, aggs, keys)
+    if emit_every is not None and slide_sec != emit_every:
+        out = out.filter(F.col("window_start") % emit_every == 0)
     return _cast_outputs(out, aggs, float32_output)
 
 
@@ -215,9 +233,11 @@ def _tumbling(df, ts_col, size_sec, aggs, keys):
 
 
 def _exact_bucket(us: Column, step_sec: int) -> Column:
-    """(us div step_us) * step — exact integer math via SQL div."""
+    """floor(us / step_us) * step — exact floor for negative (pre-epoch)
+    ``us`` too: Spark's % truncates toward zero, so subtract the pmod;
+    the quotient of an exact multiple is exact in double (< 2^53)."""
     step_us = F.lit(step_sec * US).cast("bigint")
-    return ((us - (us % step_us)) / step_us).cast("bigint") * F.lit(step_sec)
+    return ((us - F.pmod(us, step_us)) / step_us).cast("bigint") * F.lit(step_sec)
 
 
 def _window_starts(us: Column, size_sec: int, slide_sec: int) -> Column:
@@ -491,10 +511,11 @@ def _sliding_prefix(df, ts_col, size_sec, slide_sec, aggs, panes_per_chunk=None,
         raise ValueError(f"spine_attach must be 'join' or 'union', got {spine_attach!r}")
     # chunk-parallel scan: pane index → chunk; the last k panes of each
     # chunk are duplicated into the next chunk as carry (non-own) rows
+    # (pmod: a pre-epoch pane index is negative, and % would truncate)
     p_idx = (F.col("_pane") / F.lit(slide_sec)).cast("bigint")
     own_chunk = F.floor(p_idx / F.lit(panes_per_chunk)).cast("bigint")
     assigns = F.when(
-        p_idx % F.lit(panes_per_chunk) >= F.lit(panes_per_chunk - k),
+        F.pmod(p_idx, F.lit(panes_per_chunk)) >= F.lit(panes_per_chunk - k),
         F.array(own_chunk, own_chunk + 1),
     ).otherwise(F.array(own_chunk))
     ext = dense.withColumn("_chunk", F.explode(assigns))
@@ -606,7 +627,7 @@ def window_spine(
     first = (
         ((shifted - F.pmod(shifted, step_us)) / step_us).cast("bigint") + 1
     ) * F.lit(slide_sec)
-    last = (((hi - (hi % step_us)) / step_us)).cast("bigint") * F.lit(slide_sec)
+    last = _exact_bucket(hi, slide_sec)
     # index space i = window_start / slide; chunk c owns i ∈ [c·spc, (c+1)·spc)
     i_lo = (first / F.lit(slide_sec)).cast("bigint")
     i_hi = (last / F.lit(slide_sec)).cast("bigint")

@@ -180,10 +180,12 @@ def sg1(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # SG1 at the TRUE reference parameters — window(3600, 1): ratio 3600,
-# the workload LightSaber exists for. Per-row expansion would replicate
-# every row 3600×; the prefix-sum path costs one span-bound spine scan.
-# Output thinned to minute-aligned windows for the comparison only
-# (the filter sits above the window scan, so the full computation runs).
+# the workload LightSaber exists for. Output is thinned to minute-aligned
+# windows, so ``emit_every=60`` computes only those: window(3600, 60)
+# on the pane path, ratio 60 instead of 3600 (gcd slicing applied to
+# the emitted starts). The oracle keeps the full 1 s formulation, so
+# parity proves the two forms equal. The ratio-3600 prefix path stays
+# covered by test_window_properties and test_prefix_spine_attach_shapes.
 # ---------------------------------------------------------------------------
 @query(
     "sg1_ref_window_3600_1",
@@ -212,13 +214,13 @@ def sg1(spark, sf_dir):
     """,
 )
 def sg1_ref(spark, sf_dir):
-    """SG1 at the reference's true window(3600,1): prefix-sum path —
-    subtract-on-evict as distributed prefix sums, O(rows + spans) not
-    O(rows*3600)."""
+    """SG1 at the reference's true window(3600,1), minute-aligned
+    starts only: computed at slide gcd(3600, 60) = 60."""
     ev = _with_cents(_events(spark, sf_dir))
     r = windowed_agg(ev, "ts", 3600, 1,
-                     [("sum", "value_c", "sum_c"), ("count", None, "n")])
-    return r.filter(F.col("window_start") % 60 == 0).select(
+                     [("sum", "value_c", "sum_c"), ("count", None, "n")],
+                     emit_every=60)
+    return r.select(
         "window_start",
         (F.col("sum_c") / 100.0 / F.col("n")).alias("avg_value"), "n",
     )
@@ -226,12 +228,12 @@ def sg1_ref(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # SG1 shape with NON-INVERTIBLE aggregates — min/max over the same true
-# window(3600, 1). No subtract-on-evict exists for min/max; the prefix
-# path switches to the van Herk–Gil–Werman two-level block maxima (the
+# window(3600, 1), minute-aligned starts only (``emit_every=60``: the
+# pane path at window(3600, 60)). At full ratio the prefix path answers
+# min/max with the van Herk–Gil–Werman two-level block maxima (the
 # relational analog of the reference's AggregationTree,
-# ``src/utils/AggregationTree.h``): O(1) merges per window on the pane
-# spine instead of a 3600× pane explode. The DuckDB oracle is the
-# positional frame max/min over the same dense pane spine.
+# ``src/utils/AggregationTree.h``). The DuckDB oracle is the positional
+# frame max/min over the dense 1 s pane spine.
 # ---------------------------------------------------------------------------
 @query(
     "sg1_ref_window_3600_1_minmax",
@@ -259,15 +261,16 @@ def sg1_ref(spark, sf_dir):
     """,
 )
 def sg1_ref_minmax(spark, sf_dir):
-    """Non-invertible MIN/MAX at window(3600,1): van Herk two-level
-    pane hierarchy — O(1) amortized per pane, never a 3600x explode."""
+    """Non-invertible MIN/MAX at window(3600,1), minute-aligned starts
+    only: computed at slide gcd(3600, 60) = 60."""
     ev = _with_cents(_events(spark, sf_dir))
     r = windowed_agg(
         ev, "ts", 3600, 1,
         [("max", "value_c", "max_c"), ("min", "value_c", "min_c"),
          ("count", None, "n")],
+        emit_every=60,
     )
-    return r.filter(F.col("window_start") % 60 == 0).select(
+    return r.select(
         "window_start",
         (F.col("max_c") / 100.0).alias("max_value"),
         (F.col("min_c") / 100.0).alias("min_value"),
@@ -276,9 +279,10 @@ def sg1_ref_minmax(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# CM1 at the TRUE reference parameters — window(60, 1), grouped: the
-# pane path at ratio 60 (grouped windows can't use the global prefix
-# scan; panes explode 60× but pane count ≪ row count).
+# CM1 at the TRUE reference parameters — window(60, 1), grouped, with
+# starts thinned to multiples of 300 s: ``emit_every=300`` computes at
+# slide gcd(60, 300) = 60, a tumbling aggregation, and keeps % 300.
+# The oracle keeps the full 1 s expansion.
 # ---------------------------------------------------------------------------
 @query(
     "cm1_ref_window_60_1",
@@ -292,15 +296,15 @@ def sg1_ref_minmax(spark, sf_dir):
     """,
 )
 def cm1_ref(spark, sf_dir):
-    """CM1 at the reference's true window(60,1) parameters via the
-    gcd-pane path."""
+    """CM1 at the reference's true window(60,1) parameters, starts
+    % 300 only: computed as tumbling window(60, 60)."""
     ev = _with_cents(
         _events(spark, sf_dir).withColumn("category", F.col("user_id") % 5)
     )
     r = windowed_agg(ev, "ts", 60, 1,
                      [("sum", "value_c", "sum_c"), ("count", None, "n")],
-                     ["category"])
-    return r.filter(F.col("window_start") % 300 == 0).select(
+                     ["category"], emit_every=300)
+    return r.select(
         "window_start", "category",
         (F.col("sum_c") / 100.0).alias("sum_value"), "n",
     )

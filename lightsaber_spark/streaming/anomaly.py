@@ -84,14 +84,9 @@ def streaming_zscore_outliers(
             xs = pdf["_x"].to_numpy()
             ids = pdf["event_id"].to_numpy()
             for t, x, eid in zip(ts_us, xs, ids):
-                # truncate toward zero like the batch twin's
-                # _exact_bucket (Spark % keeps the dividend sign) —
-                # Python // floors, which diverges on pre-epoch
-                # timestamps (r12 review; out-of-domain but cheap to
-                # keep bit-aligned)
-                t = int(t)
-                q = t // size_us if t >= 0 else -((-t) // size_us)
-                w = q * size_sec
+                # floor like the batch twin's _exact_bucket, pre-epoch
+                # timestamps included
+                w = (int(t) // size_us) * size_sec
                 if cw is None:
                     cw = w
                 elif w > cw:

@@ -26,7 +26,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -39,22 +41,28 @@ def _measure(
 
     listener = ThroughputListener()
     spark.streams.addListener(listener)
-    q = (
-        make_stream()
-        .writeStream.format("noop")
-        .outputMode(output_mode)
-        .option("checkpointLocation", f"/tmp/stream_bench_ck/{name}-{time.time_ns()}")
-        .start()
-    )
+    # a fresh checkpoint per shape, removed when it stops: state from
+    # one run must neither resume in the next nor pile up on disk
+    ckpt = tempfile.mkdtemp(prefix=f"stream_bench_ck-{name}-")
+    q = None
     try:
+        q = (
+            make_stream()
+            .writeStream.format("noop")
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
         while len(listener.metrics) < batches:
             time.sleep(0.2)
     finally:
         # stopping aborts the in-flight batch — the CANNOT_COMMIT /
         # NoopStreamingWrite-abort ERRORs it logs are expected noise,
         # not a failure: the measured batches all committed.
-        q.stop()
+        if q is not None:
+            q.stop()
         spark.streams.removeListener(listener)
+        shutil.rmtree(ckpt, ignore_errors=True)
     # drop the first two batches (codegen + state-store warmup)
     steady = [m for m in listener.metrics[2:batches] if m.num_input_rows > 0]
     rows = sum(m.num_input_rows for m in steady)

@@ -32,20 +32,14 @@ def _plan(spark, name):
 # are the measured counts — any increase means a new shuffle appeared.
 _EXCHANGE_CEILINGS = {
     "cm1_sliding_sum_by_type": 2,      # pane agg + window merge
-    # pane agg + 1-row bounds (tiny) + distributed-spine chunk fan-out
-    # (span/65k rows — tiny) + chunk-scan window. Back to 4 in r16:
-    # the spine↔panes attach is a plain left join again (default
-    # ``spine_attach="join"``) — the planner tiers it by size
-    # (broadcast only under the threshold; at 100 TB the span-bound
-    # pane agg estimates input-bound-huge, so it degrades to a
-    # shuffled join, re-tiered by AQE from runtime sizes). The r15
-    # union+merge shape cost the sg1_ref pair ~1.3–2.4× locally
-    # (VERDICT r15 #2/#4); it remains available and contract-pinned
-    # via ``spine_attach="union"`` (test_prefix_spine_attach_shapes)
-    # for callers with known-huge spans. See
-    # plans/r16/sg1_ref_window_3600_1_{before,after}.txt.
-    "sg1_ref_window_3600_1": 4,
-    "sg1_ref_window_3600_1_minmax": 4,  # same spine scaffold, van Herk scan
+    # emit_every=60 runs these at window(3600, 60) on the pane path:
+    # pane agg + window merge. The ratio-3600 prefix path (spine
+    # scaffold, planner-tiered spine attach) is pinned only by
+    # test_prefix_spine_attach_shapes below, no longer by a catalog query.
+    "sg1_ref_window_3600_1": 2,
+    "sg1_ref_window_3600_1_minmax": 2,
+    # emit_every=300 over window(60, 1) is tumbling window(60, 60)
+    "cm1_ref_window_60_1": 1,
     "dedup_ngram_jaccard": 7,          # df agg + prefix window + candidate join + 2 verify joins
     "ysb_static_join_tumbling": 2,     # window agg (join is broadcast)
     "nbq5_post_window_argmax": 3,      # count agg ×2 subplans (AQE reuses) + max join
@@ -82,7 +76,11 @@ def test_prefix_spine_attach_shapes(spark, tables):
     ``spine_attach='union'`` keeps the r15 guaranteed-no-broadcast
     shape for known-huge spans. Pins: (a) the union shape has ZERO
     join nodes anywhere in the plan, (b) the default shape stays at
-    the 4-exchange ceiling, (c) both shapes are row-identical."""
+    the 4-exchange ceiling (pane agg + 1-row bounds + distributed-spine
+    chunk fan-out + chunk-scan window; see
+    plans/r16/sg1_ref_window_3600_1_{before,after}.txt), (c) both
+    shapes are row-identical. No catalog query takes the prefix path
+    any more, so this test is the shape's only pin."""
     from lightsaber_spark.operators import windowed_agg
 
     ev = tables["events"]

@@ -61,3 +61,36 @@ def test_append_run_without_markdown(tmp_path):
     with open(js) as f:
         assert [r["results"]["passthrough"]["rows_per_sec"] for r in json.load(f)] == [1, 2]
     assert os.listdir(tmp_path) == ["s.json"]
+
+
+def test_measure_removes_its_checkpoint(spark, tmp_path, monkeypatch):
+    """``_measure`` checkpoints each shape in a fresh directory and
+    removes it once the query stops."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from lightsaber_spark.sources.readers import rate_micro_batch_source
+
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def mkdtemp(*a, **k):
+        made.append(real_mkdtemp(*a, **k))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+
+    def stream():
+        return rate_micro_batch_source(
+            spark, rows_per_batch=100, num_partitions=1,
+            start_timestamp_ms=100_000, advance_ms_per_batch=1000,
+        ).select(F.col("timestamp").alias("ts"), F.col("value"))
+
+    out = _stream_bench()._measure(spark, "tiny_passthrough", stream, 3)
+
+    assert out["batches_measured"] >= 1
+    assert len(made) == 1 and "tiny_passthrough" in os.path.basename(made[0])
+    assert not os.path.exists(made[0])
+    assert not [p for p in os.listdir(tmp_path) if "tiny_passthrough" in p]
