@@ -296,7 +296,7 @@ def _floor_windows(size, slide, every=None):
 )
 def test_pre_epoch_timestamps_floor(spark, size, slide, kw):
     """Timestamps before 1970 bucket by floor, not truncation: −1 µs
-    lies in the window starting at −size, not at 0."""
+    lies in the tumbling window starting at −size, not at 0."""
     df = _pre_epoch_frame(spark)
     aggs = [("count", None, "n"), ("sum", "value", "s")]
     got = sorted(
@@ -315,3 +315,7 @@ def test_pre_epoch_window_spine_and_rollup_bucket(spark):
     starts = sorted(r[0] for r in window_spine(df, "ts", 3600, 600).collect())
     want = [s for s, _n, _v in _floor_windows(3600, 600)]
     assert starts == list(range(want[0], want[-1] + 1, 600))
+    # all-negative data: the last start is floor(−1 µs / 600 s) = −600
+    before = df.filter(F.col("us") < 0)
+    starts = sorted(r[0] for r in window_spine(before, "ts", 3600, 600).collect())
+    assert starts == list(range(want[0], -600 + 1, 600))
