@@ -33,9 +33,9 @@ def _plan(spark, name):
 _EXCHANGE_CEILINGS = {
     "cm1_sliding_sum_by_type": 2,      # pane agg + window merge
     # emit_every=60 runs these at window(3600, 60) on the pane path:
-    # pane agg + window merge. The ratio-3600 prefix path (spine
-    # scaffold, planner-tiered spine attach) is pinned only by
-    # test_prefix_spine_attach_shapes below, no longer by a catalog query.
+    # pane agg + window merge. The prefix path's shape (spine scaffold,
+    # planner-tiered spine attach) is pinned by
+    # test_prefix_spine_attach_shapes below.
     "sg1_ref_window_3600_1": 2,
     "sg1_ref_window_3600_1_minmax": 2,
     # emit_every=300 over window(60, 1) is tumbling window(60, 60)
@@ -79,8 +79,8 @@ def test_prefix_spine_attach_shapes(spark, tables):
     the 4-exchange ceiling (pane agg + 1-row bounds + distributed-spine
     chunk fan-out + chunk-scan window; see
     plans/r16/sg1_ref_window_3600_1_{before,after}.txt), (c) both
-    shapes are row-identical. No catalog query takes the prefix path
-    any more, so this test is the shape's only pin."""
+    shapes are row-identical. No catalog query takes the prefix path,
+    so this test is the shape's only pin."""
     from lightsaber_spark.operators import windowed_agg
 
     ev = tables["events"]
