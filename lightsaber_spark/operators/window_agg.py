@@ -135,9 +135,7 @@ def windowed_agg(
     use_panes: bool | None = None,
     use_prefix: bool | None = None,
     prefix_panes_per_chunk: int | None = None,
-    prefix_spine_attach: str = "join",
     float32_output: bool = False,
-    emit_every: int | None = None,
 ) -> DataFrame:
     """Event-time (RANGE_BASED) windowed aggregation.
 
@@ -146,13 +144,6 @@ def windowed_agg(
     emitted (gap fill is opt-in, :func:`window_spine`).
 
     Physical strategy ladder (auto-selected):
-    - ``emit_every=M`` (a multiple of slide) → only starts ``% M == 0``
-      are emitted, so the ladder below runs at slide
-      step = gcd(size, M) (the declared slide if that gcd is not a
-      multiple of it) and keeps ``window_start % M == 0`` when
-      step != M — the reference's gcd slicing (``WindowDefinition.h:80-90``)
-      applied to the emitted windows: window(3600, 1) emitting every
-      60th start computes window(3600, 60), 60× fewer windows.
     - tumbling → one hash aggregation.
     - sliding, ratio < ``pane_threshold`` → per-row expansion.
     - sliding, ratio >= ``pane_threshold`` → pane decomposition
@@ -177,42 +168,31 @@ def windowed_agg(
     if slide_sec > size_sec:
         raise ValueError("slide > size (hopping-with-gaps) not in reference semantics")
     keys = list(keys)
-    if emit_every is not None:
-        if emit_every <= 0 or emit_every % slide_sec:
-            raise ValueError(
-                f"emit_every must be a positive multiple of slide {slide_sec}, "
-                f"got {emit_every}"
-            )
-        step = math.gcd(size_sec, emit_every)
-        if step % slide_sec == 0:
-            slide_sec = step
+
     if slide_sec == size_sec:
         out = _tumbling(df, ts_col, size_sec, aggs, keys)
-    else:
-        ratio = size_sec / slide_sec
-        prefix_ok = (
-            not keys
-            and size_sec % slide_sec == 0
-            and all(f in _INVERTIBLE or f in ("min", "max") for f, _c, _a in aggs)
+        return _cast_outputs(out, aggs, float32_output)
+    ratio = size_sec / slide_sec
+    prefix_ok = (
+        not keys
+        and size_sec % slide_sec == 0
+        and all(f in _INVERTIBLE or f in ("min", "max") for f, _c, _a in aggs)
+    )
+    if use_prefix is None:
+        use_prefix = prefix_ok and ratio >= prefix_threshold
+    elif use_prefix and not prefix_ok:
+        raise ValueError(
+            "prefix path needs global (no keys), invertible aggs, slide | size"
         )
-        if use_prefix is None:
-            use_prefix = prefix_ok and ratio >= prefix_threshold
-        elif use_prefix and not prefix_ok:
-            raise ValueError(
-                "prefix path needs global (no keys), invertible aggs, slide | size"
-            )
-        if use_prefix:
-            out = _sliding_prefix(
-                df, ts_col, size_sec, slide_sec, aggs,
-                panes_per_chunk=prefix_panes_per_chunk,
-                spine_attach=prefix_spine_attach,
-            )
-        elif use_panes if use_panes is not None else ratio >= pane_threshold:
-            out = _sliding_panes(df, ts_col, size_sec, slide_sec, aggs, keys)
-        else:
-            out = _sliding_native(df, ts_col, size_sec, slide_sec, aggs, keys)
-    if emit_every is not None and slide_sec != emit_every:
-        out = out.filter(F.col("window_start") % emit_every == 0)
+    if use_prefix:
+        out = _sliding_prefix(
+            df, ts_col, size_sec, slide_sec, aggs,
+            panes_per_chunk=prefix_panes_per_chunk,
+        )
+    elif use_panes if use_panes is not None else ratio >= pane_threshold:
+        out = _sliding_panes(df, ts_col, size_sec, slide_sec, aggs, keys)
+    else:
+        out = _sliding_native(df, ts_col, size_sec, slide_sec, aggs, keys)
     return _cast_outputs(out, aggs, float32_output)
 
 
@@ -378,8 +358,7 @@ def _chunked_index_fanout(bounds, i_lo, i_hi, per_chunk: int, out_col: str,
     )
 
 
-def _sliding_prefix(df, ts_col, size_sec, slide_sec, aggs, panes_per_chunk=None,
-                    spine_attach="join"):
+def _sliding_prefix(df, ts_col, size_sec, slide_sec, aggs, panes_per_chunk=None):
     """Prefix-scan sliding aggregation for very high size/slide ratios
     (global, slide | size; invertible aggs plus MIN/MAX).
 
@@ -467,48 +446,16 @@ def _sliding_prefix(df, ts_col, size_sec, slide_sec, aggs, panes_per_chunk=None,
 
     from pyspark.sql import Window
 
-    # Spine attach, TIERED (r16, guide §3.1 — reworking r15's
-    # unconditional union+merge):
-    #
-    # - ``spine_attach="join"`` (default): plain left join, strategy
-    #   left to the planner. This is already size-based at every scale:
-    #   the build side (stage1, the pane aggregation) is broadcast only
-    #   while its size estimate is under autoBroadcastJoinThreshold —
-    #   at 100 TB the estimate for an aggregate over the full stream is
-    #   input-bound (huge), so the static planner picks a shuffled
-    #   join and AQE re-tiers it from RUNTIME sizes (promote back to
-    #   broadcast / SHJ when the materialized pane relation is actually
-    #   small). Locally the spine attach stays one BroadcastHashJoin —
-    #   no extra shuffle, no extra AQE stage (the r15 union shape cost
-    #   the sg1_ref pair ~1.3–1.6× at the driver; VERDICT r15 #4).
-    # - ``spine_attach="union"``: the r15 shape — unionByName + one
-    #   merge HashAggregate. Row-identical (every stage1 pane is
-    #   inside the spine range, panes unique, merging {value, NULL}
-    #   with sum/min/max reproduces value-or-NULL per pane); costs one
-    #   explicit spine-bound shuffle but provably never sorts and
-    #   never broadcasts a span-bound side regardless of estimates —
-    #   the guaranteed shape for known-huge spans (a year at 1 s slide
-    #   is ~31M panes). Pinned by the parameterized plan-contract test.
-    if spine_attach == "join":
-        dense = spine.join(stage1, "_pane", "left")
-    elif spine_attach == "union":
-        null_partials = [
-            F.lit(None).cast(stage1.schema[n].dataType).alias(n)
-            for n in partials
-        ]
-        merge_aggs = []
-        for n in partials:
-            f = F.min if mm_partials.get(n) == "min" else (
-                F.max if n in mm_partials else F.sum
-            )
-            merge_aggs.append(f(n).alias(n))
-        dense = (
-            stage1.unionByName(spine.select(F.col("_pane"), *null_partials))
-            .groupBy("_pane")
-            .agg(*merge_aggs)
-        )
-    else:
-        raise ValueError(f"spine_attach must be 'join' or 'union', got {spine_attach!r}")
+    # Spine attach: a plain left join, strategy left to the planner.
+    # This is size-based at every scale: the build side (stage1, the
+    # pane aggregation) is broadcast only while its size estimate is
+    # under autoBroadcastJoinThreshold — at 100 TB the estimate for an
+    # aggregate over the full stream is input-bound (huge), so the
+    # static planner picks a shuffled join and AQE re-tiers it from
+    # RUNTIME sizes. Locally it stays one BroadcastHashJoin — no extra
+    # shuffle, no extra AQE stage (a union + merge-aggregate attach cost
+    # the sg1_ref pair ~1.3–1.6× at the driver; VERDICT r15 #4).
+    dense = spine.join(stage1, "_pane", "left")
     # chunk-parallel scan: pane index → chunk; the last k panes of each
     # chunk are duplicated into the next chunk as carry (non-own) rows
     # (pmod: a pre-epoch pane index is negative, and % would truncate)

@@ -181,11 +181,15 @@ def sg1(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # SG1 at the TRUE reference parameters — window(3600, 1): ratio 3600,
 # the workload LightSaber exists for. Output is thinned to minute-aligned
-# windows, so ``emit_every=60`` computes only those: window(3600, 60)
-# on the pane path, ratio 60 instead of 3600 (gcd slicing applied to
-# the emitted starts). The oracle keeps the full 1 s formulation, so
-# parity proves the two forms equal. The ratio-3600 prefix path stays
-# covered by test_window_properties and test_prefix_spine_attach_shapes.
+# windows, and a window set emitting only starts % M == 0 equals the
+# same windows computed at slide gcd(size, M) (the reference's gcd
+# slicing, ``WindowDefinition.h:80-90``, applied to the emitted starts):
+# gcd(3600, 60) = 60, so this computes window(3600, 60) on the pane
+# path, ratio 60 instead of 3600, and every start is already % 60. The
+# oracle keeps the full 1 s formulation, so parity proves the two forms
+# equal. The ratio-3600 prefix path stays covered by
+# test_window_properties, test_prefix_spine_attach_shapes and
+# scripts/strategy_bench.py.
 # ---------------------------------------------------------------------------
 @query(
     "sg1_ref_window_3600_1",
@@ -217,9 +221,8 @@ def sg1_ref(spark, sf_dir):
     """SG1 at the reference's true window(3600,1), minute-aligned
     starts only: computed at slide gcd(3600, 60) = 60."""
     ev = _with_cents(_events(spark, sf_dir))
-    r = windowed_agg(ev, "ts", 3600, 1,
-                     [("sum", "value_c", "sum_c"), ("count", None, "n")],
-                     emit_every=60)
+    r = windowed_agg(ev, "ts", 3600, 60,
+                     [("sum", "value_c", "sum_c"), ("count", None, "n")])
     return r.select(
         "window_start",
         (F.col("sum_c") / 100.0 / F.col("n")).alias("avg_value"), "n",
@@ -228,9 +231,9 @@ def sg1_ref(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # SG1 shape with NON-INVERTIBLE aggregates — min/max over the same true
-# window(3600, 1), minute-aligned starts only (``emit_every=60``: the
-# pane path at window(3600, 60)). At full ratio the prefix path answers
-# min/max with the van Herk–Gil–Werman two-level block maxima (the
+# window(3600, 1), minute-aligned starts only, so computed as
+# window(3600, 60) on the pane path like sg1_ref above. At full ratio
+# the prefix path answers min/max with the van Herk–Gil–Werman two-level block maxima (the
 # relational analog of the reference's AggregationTree,
 # ``src/utils/AggregationTree.h``). The DuckDB oracle is the positional
 # frame max/min over the dense 1 s pane spine.
@@ -265,10 +268,9 @@ def sg1_ref_minmax(spark, sf_dir):
     only: computed at slide gcd(3600, 60) = 60."""
     ev = _with_cents(_events(spark, sf_dir))
     r = windowed_agg(
-        ev, "ts", 3600, 1,
+        ev, "ts", 3600, 60,
         [("max", "value_c", "max_c"), ("min", "value_c", "min_c"),
          ("count", None, "n")],
-        emit_every=60,
     )
     return r.select(
         "window_start",
@@ -280,9 +282,9 @@ def sg1_ref_minmax(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # CM1 at the TRUE reference parameters — window(60, 1), grouped, with
-# starts thinned to multiples of 300 s: ``emit_every=300`` computes at
-# slide gcd(60, 300) = 60, a tumbling aggregation, and keeps % 300.
-# The oracle keeps the full 1 s expansion.
+# starts thinned to multiples of 300 s. As in sg1_ref, those windows
+# equal the ones computed at slide gcd(60, 300) = 60: a tumbling
+# aggregation, then keep % 300. The oracle keeps the full 1 s expansion.
 # ---------------------------------------------------------------------------
 @query(
     "cm1_ref_window_60_1",
@@ -301,10 +303,10 @@ def cm1_ref(spark, sf_dir):
     ev = _with_cents(
         _events(spark, sf_dir).withColumn("category", F.col("user_id") % 5)
     )
-    r = windowed_agg(ev, "ts", 60, 1,
+    r = windowed_agg(ev, "ts", 60, 60,
                      [("sum", "value_c", "sum_c"), ("count", None, "n")],
-                     ["category"], emit_every=300)
-    return r.select(
+                     ["category"])
+    return r.filter(F.col("window_start") % 300 == 0).select(
         "window_start", "category",
         (F.col("sum_c") / 100.0).alias("sum_value"), "n",
     )

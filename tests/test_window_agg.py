@@ -2,8 +2,6 @@
 {tumbling, sliding} × {grouped, global} × {sum,cnt,avg,min,max}), plus
 pane-path equivalence and gap fill."""
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -179,84 +177,6 @@ def test_interpolated_fill_exact_fraction(spark):
     }
 
 
-_EMIT_AGGS = [
-    ("sum", "value", "s"), ("count", None, "n"),
-    ("min", "value", "lo"), ("max", "value", "hi"),
-]
-
-
-_EMIT_CASES = [
-    # (size, slide, every, strategy at the computed step, kwargs)
-    (60, 1, 300, "tumbling", {}),          # cm1's case: every > size
-    (3600, 600, 3600, "tumbling", {}),     # every == size
-    (1800, 300, 600, "native", {}),        # step 600, ratio 3
-    (3600, 60, 600, "panes", {}),          # step 600, ratio 6
-    (600, 60, 900, "native", {}),          # every ∤ size: step gcd = 300
-    (3600, 60, 1620, "panes", {}),         # every ∤ size: step gcd = 180
-    (3600, 60, 120, "prefix", {"use_prefix": True}),
-    (900, 600, 1200, "panes", {"use_panes": True}),  # gcd 300 < slide: step stays 600
-]
-
-
-@pytest.mark.parametrize(
-    "size, slide, every, strategy, kw, keys",
-    [
-        (*case, keys)
-        for case in _EMIT_CASES
-        for keys in ([], ["event_type"])
-        if not (case[3] == "prefix" and keys)  # the prefix path is global-only
-    ],
-)
-def test_emit_every_equals_filtered_full_slide(
-    events, monkeypatch, size, slide, every, strategy, kw, keys
-):
-    """``emit_every=M`` computes at slide gcd(size, M) (or the declared
-    slide when that gcd is not a multiple of it) and emits exactly the
-    rows of the full-slide computation filtered to starts % M == 0."""
-    from lightsaber_spark.operators import window_agg as wa
-
-    ref = windowed_agg(events, "ts", size, slide, _EMIT_AGGS, keys).filter(
-        F.col("window_start") % every == 0
-    )
-    want = ref.collect()
-
-    ran = []
-    for name in ("_tumbling", "_sliding_native", "_sliding_panes", "_sliding_prefix"):
-        real = getattr(wa, name)
-
-        def spy(df, ts_col, size_sec, *a, _real=real, _name=name, **k):
-            step = size_sec if _name == "_tumbling" else a[0]
-            ran.append((_name.rsplit("_", 1)[-1], step))
-            return _real(df, ts_col, size_sec, *a, **k)
-
-        monkeypatch.setattr(wa, name, spy)
-    got = windowed_agg(
-        events, "ts", size, slide, _EMIT_AGGS, keys, emit_every=every, **kw
-    ).collect()
-    assert want, "the reference must emit rows for the comparison to mean anything"
-    ok, msg = rows_match(got, want, float_tol=1e-9)
-    assert ok, msg
-    step = math.gcd(size, every)
-    step = step if step % slide == 0 else slide
-    assert ran == [(strategy, step)]
-
-
-def test_emit_every_float32_output(events):
-    aggs = [("sum", "value", "s"), ("count", None, "n")]
-    out = windowed_agg(events, "ts", 3600, 60, aggs, emit_every=600, float32_output=True)
-    assert dict(out.dtypes)["s"] == "float" and dict(out.dtypes)["n"] == "float"
-    ref = windowed_agg(events, "ts", 3600, 60, aggs, float32_output=True).filter(
-        F.col("window_start") % 600 == 0
-    )
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, ref.collect()))
-
-
-@pytest.mark.parametrize("every", [90, 0, -60])
-def test_emit_every_must_be_positive_multiple_of_slide(events, every):
-    with pytest.raises(ValueError, match="emit_every"):
-        windowed_agg(events, "ts", 3600, 60, [("count", None, "n")], emit_every=every)
-
-
 _PRE_EPOCH_US = [-3_601_000_000, -1_000_000, -1, 0, 1_000_000, 3_599_999_999]
 
 
@@ -267,7 +187,7 @@ def _pre_epoch_frame(spark):
     )
 
 
-def _floor_windows(size, slide, every=None):
+def _floor_windows(size, slide):
     """Pure-Python reference: start s (a multiple of slide, seconds)
     holds row t iff s <= t < s + size, with exact // floor division."""
     us = 1_000_000
@@ -277,9 +197,8 @@ def _floor_windows(size, slide, every=None):
         hi = t // (slide * us)
         for j in range(lo, hi + 1):
             s = j * slide
-            if every is None or s % every == 0:
-                n, v = out.get(s, (0, 0.0))
-                out[s] = (n + 1, v + float(i + 1))
+            n, v = out.get(s, (0, 0.0))
+            out[s] = (n + 1, v + float(i + 1))
     return sorted((s, n, v) for s, (n, v) in out.items())
 
 
@@ -291,7 +210,6 @@ def _floor_windows(size, slide, every=None):
         (3600, 600, {"use_panes": True}),
         (3600, 1200, {"use_panes": False}),     # native expansion
         (3600, 60, {"use_prefix": True}),       # chunk carry across index 0
-        (3600, 1, {"emit_every": 600}),         # computed at slide 600
     ],
 )
 def test_pre_epoch_timestamps_floor(spark, size, slide, kw):
@@ -302,7 +220,7 @@ def test_pre_epoch_timestamps_floor(spark, size, slide, kw):
     got = sorted(
         tuple(r) for r in windowed_agg(df, "ts", size, slide, aggs, **kw).collect()
     )
-    assert got == _floor_windows(size, slide, kw.get("emit_every"))
+    assert got == _floor_windows(size, slide)
 
 
 def test_pre_epoch_window_spine_and_rollup_bucket(spark):
