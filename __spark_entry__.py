@@ -1,14 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Thin facade over :mod:`lightsaber_spark.queries` — the canonical query
-catalog (SURVEY.md §2/§5 parity queries + beyond-parity pipeline ops),
-each with a DuckDB oracle twin.
+Thin facade over :mod:`lightsaber_spark.registry` — the query catalog
+(SURVEY.md §2/§5 parity queries + beyond-parity pipeline ops), each
+with a DuckDB oracle twin.
 
-Registration ORDER is part of the contract: the driver's correctness
-sweep may cap how many queries it checks per round, so the dicts below
-are emitted highest-information-first — the canonical reference
-benchmark queries, then queries without a green driver row yet
-(round-1 sweep stopped at 50/89), then the previously-verified tail.
+ORDER is part of the contract: the driver's correctness sweep may cap
+how many queries it checks per round, so the dicts below are emitted
+highest-information-first (see ``_ordered``).
 """
 
 from __future__ import annotations
@@ -17,22 +15,13 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# The reference's own benchmark suite (SURVEY §5) — always first.
-_CANONICAL = [
-    "cm1_sliding_sum_by_type",
-    "cm2_filter_sliding_sum_by_user",
-    "sg1_global_sliding_avg",
-    "sg1_ref_window_3600_1",
-    "cm1_ref_window_60_1",
-    "sg2_tumbling_avg_by_user_type",
-    "sg3_filter_sliding_avg_by_user",
-    "lrb1_derived_key_having",
-    "lrb2_row_window_count",
-    "lrb3_two_stage_dag",
-    "me1_multi_agg_tumbling",
-    "ysb_static_join_tumbling",
-    "nbq5_post_window_argmax",
-]
+from lightsaber_spark import registry
+
+registry.catalog()
+
+# The reference's own benchmark suite (SURVEY §5), registered with
+# ``canonical=True`` — always first.
+_CANONICAL = list(registry.CANONICAL)
 
 # Staleness is MECHANIZED (round-3 verdict #2): a green driver row
 # vouches for a query only while the query's implementation hash
@@ -95,28 +84,27 @@ def _last_green_round() -> dict[str, int]:
 
 def _ordered(mapping: dict) -> dict:
     """Canonical reference-benchmark queries first, then everything else
-    by staleness tier: never-green (no driver row EVER — the judge's
-    top verification ask) before hash-staled greens (implementation
-    changed since the row — see _vouch_state) before older-green before
-    recently-green, original registration order as the tie-break. New
-    queries have no CORRECTNESS row → front. The driver's sweep cap
-    (~50) truncates the tail, so tier order is what guarantees the
-    highest-information queries get their row first."""
+    by ``(tier, last green round, registration index)``. Tiers:
+    never-green (no driver row EVER — the judge's top verification ask)
+    before unvouched greens (implementation changed since the row, or
+    never hash-recorded — see _vouch_state) before vouched greens. New
+    queries have no CORRECTNESS row → front. Within a tier the oldest
+    green round comes first, so when nothing is vouched the sweep still
+    rotates through the least recently verified queries. The driver's
+    sweep cap (~50) truncates the tail, so this order is what
+    guarantees the highest-information queries get their row first."""
     from lightsaber_spark.staleness import is_vouched
 
     last = _last_green_round()
     current, recorded = _vouch_state()
     reg_index = {n: i for i, n in enumerate(mapping)}
-    rest = [n for n in mapping if n not in set(_CANONICAL)]
 
-    def tier(n: str) -> int:
+    def key(n: str) -> tuple[int, int, int]:
         if n not in last:
-            return -2  # never had any green driver row
-        if not is_vouched(n, current, recorded):
-            return -1  # green, but the implementation changed since
-        return last[n]
+            return (0, -1, reg_index[n])
+        return (2 if is_vouched(n, current, recorded) else 1, last[n], reg_index[n])
 
-    rest.sort(key=lambda n: (tier(n), reg_index[n]))
+    rest = sorted((n for n in mapping if n not in _CANONICAL), key=key)
     order = [n for n in _CANONICAL if n in mapping] + rest
     return {n: mapping[n] for n in order}
 
@@ -124,20 +112,12 @@ def _ordered(mapping: dict) -> dict:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (CM1 analog: sliding windowed sum, pane-optimized)
     on /root/testdata/sf0.001; driver checks rows>0."""
-    from lightsaber_spark.queries import SPARK_QUERIES
-
-    return SPARK_QUERIES["cm1_sliding_sum_by_type"](spark, "/root/testdata/sf0.001")
+    return registry.SPARK_QUERIES["cm1_sliding_sum_by_type"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    import lightsaber_spark.pipeline_queries  # noqa: F401 — registers entries
-    from lightsaber_spark.queries import SPARK_QUERIES
-
-    return _ordered(SPARK_QUERIES)
+    return _ordered(registry.SPARK_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    import lightsaber_spark.pipeline_queries  # noqa: F401 — registers entries
-    from lightsaber_spark.queries import ORACLE_SQL
-
-    return _ordered(ORACLE_SQL)
+    return _ordered(registry.ORACLE_SQL)

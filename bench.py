@@ -38,7 +38,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    from lightsaber_spark import get_spark
+    from lightsaber_spark import get_spark, registry
     import __spark_entry__ as entrymod
 
     spark = get_spark(app_name="lightsaber-bench")
@@ -155,25 +155,10 @@ def main() -> None:
     with open(os.path.join(_REPO, "BENCH.json"), "w") as f:
         f.write(json.dumps(full) + "\n")
 
-    # r16 (VERDICT r15 #9): the stdout headline now ALSO carries the
-    # r15/r16 optimization-target queries so the driver's PERF
-    # comparison captures their round-over-round movement directly
-    # (additions only — the 13 canonical entries are unchanged).
-    _WATCHLIST = [
-        "sg1_ref_window_3600_1_minmax",
-        "multimodal_decode_real",
-        "multimodal_audio_decode_real",
-        "multimodal_video_frames_real",
-        "media_ahash_spectrum",
-        "audio_fingerprint_spectrum",
-        "quality_learned_classifier",
-        "dedup_semantic_delta",
-    ]
-    headline = {
-        n: timings[n]
-        for n in list(entrymod._CANONICAL) + _WATCHLIST
-        if n in timings
-    }
+    # The stdout headline also carries the queries registered with
+    # ``watch=True`` (each decorator says why), so the driver's PERF
+    # comparison captures their round-over-round movement directly.
+    headline = {n: timings[n] for n in entrymod._CANONICAL + registry.WATCH}
     line = json.dumps(
         {
             "metric": "headline_queries_total_runtime",

@@ -92,11 +92,11 @@ def normalize_text(c: Column) -> Column:
 
 def tokens(c: Column, pattern: str = WORD_RE) -> Column:
     """Array of tokens (lowercased match of ``pattern``). NULL text
-    yields an EMPTY array, never NULL (r13 review): without the
-    coalesce every downstream ``F.size`` turned into -1 on null text
-    (Spark's size(NULL)) while DuckDB's len(NULL) is NULL — the shared
-    oracle fragment ``oracle_fragments.TOKS`` carries the same
-    COALESCE so both engines implement empty-doc semantics."""
+    yields an EMPTY array, never NULL: without the coalesce every
+    downstream ``F.size`` would be -1 on null text (Spark's size(NULL))
+    while DuckDB's len(NULL) is NULL — the shared oracle fragment
+    ``pipeline_queries.TOKS`` carries the same COALESCE so both engines
+    implement empty-doc semantics."""
     return F.coalesce(
         F.regexp_extract_all(F.lower(c), F.lit(pattern), F.lit(0)),
         F.array().cast("array<string>"),

@@ -18,7 +18,7 @@ import os
 from pyspark.sql import functions as F
 
 from lightsaber_spark.session import load_tables
-from lightsaber_spark.queries import query
+from lightsaber_spark.registry import query
 from lightsaber_spark.functions.text import (
     BPE_RE,
     LANG_PATTERNS,
@@ -73,16 +73,59 @@ def _embs(spark, sf_dir):
     return load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
 
 
-# shared oracle fragments live in the leaf module oracle_fragments (so
-# staged_queries can use them without an import back-edge); re-exported
-# here for existing call sites.
-from lightsaber_spark.oracle_fragments import (  # noqa: E402
-    H60,
-    NORM,
-    SHINGLES,
-    TOKS,
-    minhash_sig_parts,
+# Shared DuckDB oracle fragments (``staged_queries`` imports them too).
+# Cross-engine invariants they encode (CLAUDE.md exactness policy):
+# - tokenization = lowercase [a-z0-9]+ runs, identical regex semantics
+#   in Spark (`regexp_extract_all`) and DuckDB;
+# - 3-gram word shingles, space-joined, de-duplicated;
+# - 60-bit hashing = md5-hex-prefix folded to BIGINT — bit-identical on
+#   both engines and below 2^63 so no HUGEINT appears.
+#
+# NULL text yields an EMPTY token list, never NULL — the DuckDB twin
+# of functions/text.tokens()'s coalesce (r13: without it, Spark's
+# size(NULL) = -1 and DuckDB's len(NULL) = NULL silently diverged on
+# null-text corpora; every TOKS consumer inherits the fix)
+TOKS = (
+    "COALESCE(regexp_extract_all(lower(text), '[a-z0-9]+'), "
+    "CAST([] AS VARCHAR[]))"
 )
+SHINGLES = (
+    "list_distinct(list_transform(range(greatest(len(t) - 2, 0)), "
+    "i -> array_to_string(t[i+1:i+3], ' ')))"
+)
+H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
+NORM = "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')"
+
+
+def minhash_sig_parts(n_hashes: int = 32, bands: int = 8, seed: int = 42):
+    """``(consts, r, mins, band_cols, stacked)`` — the shared SQL
+    fragments of the MinHash signature recipe (LCG permutations over
+    the 60-bit shingle hash folded to X_BITS, per-band md5 keys, the
+    band/bucket unpivot). SINGLE-SOURCED here because five oracles
+    (minhash LSH, minhash+Levenshtein, delta-vs-corpus, data card,
+    calibration) used to regenerate these ~15 lines verbatim — any
+    tweak to the recipe (seed, band separator, fold) had to be
+    replicated five times or one oracle silently drifted from
+    ``minhash_band_keys_udf`` (review finding; the ``_LINE_AUG_SQL``
+    comment states the same single-sourcing rule)."""
+    consts = _lcg_constants(n_hashes, seed)
+    r = n_hashes // bands
+    mins = ",\n           ".join(
+        f"min(({a} * x + {b}) % {MERSENNE_61}) AS h{j}"
+        for j, (a, b) in enumerate(consts)
+    )
+    band_cols = ",\n           ".join(
+        "md5(concat_ws(',', "
+        + ", ".join(f"h{b * r + j}" for j in range(r))
+        + f")) AS band{b}"
+        for b in range(bands)
+    )
+    stacked = "\n      UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, band{b} AS bucket FROM banded"
+        for b in range(bands)
+    )
+    return consts, r, mins, band_cols, stacked
+
 
 _JACCARD_CTE = f"""
   toks AS (SELECT doc_id, {TOKS} AS t FROM documents),
@@ -648,6 +691,7 @@ def q_dedup_simhash(spark, sf_dir):
     SELECT v AS member, min(l) AS representative
     FROM walk GROUP BY 1
     """,
+    eager=True,  # iterative CC, localCheckpoint per round
 )
 def q_dup_groups(spark, sf_dir):
     """Pairs → connected components → representative per member (the
@@ -678,6 +722,7 @@ def q_dup_groups(spark, sf_dir):
     SELECT doc_id, lang, source FROM documents
     WHERE doc_id NOT IN (SELECT member FROM g WHERE member != representative)
     """,
+    eager=True,  # calls duplicate_groups
 )
 def q_fuzzy_keep_representatives(spark, sf_dir):
     """The FUZZY-dedup corpus materialization: near-dup pairs →
@@ -715,6 +760,7 @@ _COS = (
     FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
     WHERE {_COS.format(a='a.embedding', b='b.embedding')} >= 0.35
     """,
+    eager=True,  # centroid-bucketed GEMM setup
 )
 def q_dedup_embedding(spark, sf_dir):
     """Embedding near-dup pairs above a cosine threshold via the EXACT
@@ -829,6 +875,7 @@ _ND_BANDS = 4
     FROM cand
     WHERE {_COS.format(a='va', b='vb')} >= 0.35
     """,
+    eager=True,  # shared similarity setup
 )
 def q_dedup_embedding_lsh(spark, sf_dir):
     """4 independent 8-plane md5-derived signature bands → candidate
@@ -865,6 +912,7 @@ def q_dedup_embedding_lsh(spark, sf_dir):
     FROM scored
     QUALIFY rank <= 5
     """,
+    eager=True,  # collects the tiny centroid set
 )
 def q_sim_ivf(spark, sf_dir):
     """Multi-probe IVF (n_probe=2): each query searches its two nearest
@@ -925,6 +973,7 @@ _KM_UPDATE = """
     FROM scored
     QUALIFY rank <= 5
     """,
+    eager=True,  # k-means fit (bounded k)
 )
 def q_sim_ivf_kmeans(spark, sf_dir):
     """IVF over TRAINED centroids: deterministic integer Lloyd k-means
@@ -996,6 +1045,7 @@ def _semdedup_ctes() -> str:
            CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
     FROM ranked r LEFT JOIN drp d ON r.vec_id = d.vec_id
     """,
+    eager=True,  # k-means fit, the same bounded centroid class
 )
 def q_dedup_semantic(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): k-means cells (the trained
@@ -1127,6 +1177,8 @@ def _semdedup_corpus_state(spark, sf_dir, corpus, materialize_dir=None):
            CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
     FROM dranked r LEFT JOIN ddrp d ON r.vec_id = d.vec_id
     """,
+    eager=True,  # reuses the frozen corpus fit
+    watch=True,  # semantic-dedup fit paths, a bench headline query
 )
 def q_dedup_semantic_delta(spark, sf_dir):
     """Incremental SemDeDup for ingest (the delta twin the exact and
@@ -1193,6 +1245,7 @@ def q_multimodal_decode(spark, sf_dir):
            CAST(sum((doc_id + x + y) % 251) AS BIGINT) AS pixel_sum
     FROM xy GROUP BY doc_id
     """,
+    watch=True,  # real PNG codec on python workers, a bench headline query
 )
 def q_multimodal_decode_real(spark, sf_dir):
     """REAL codec end-to-end: one genuine PNG per document (stdlib
@@ -1682,6 +1735,7 @@ _QUALITY_PRED = f"""
            CAST((off + n_tokens - 1) // 512 AS BIGINT) AS seq_last
     FROM c
     """,
+    eager=True,  # composes duplicate_groups
 )
 def q_pipeline_end_to_end(spark, sf_dir):
     """The whole training-data assembly line as one composed lazy plan:
@@ -2892,7 +2946,12 @@ def _learned_quality_oracle(
     """
 
 
-@query("quality_learned_classifier", _learned_quality_oracle())
+@query(
+    "quality_learned_classifier",
+    _learned_quality_oracle(),
+    eager=True,  # perceptron fit: rounds + 1 one-row collects
+    watch=True,  # build-heavy fit, a bench headline query
+)
 def q_quality_learned_classifier(spark, sf_dir):
     """Learned quality scorer — the missing rung between the
     rule-based gates (``documents_quality_gate``,
@@ -3120,6 +3179,7 @@ def q_duplicated_passages(spark, sf_dir):
            CAST(sum(v * v) AS BIGINT) AS energy
     FROM s GROUP BY doc_id
     """,
+    watch=True,  # real WAV codec on python workers, a bench headline query
 )
 def q_multimodal_audio_decode(spark, sf_dir):
     """REAL audio codec end-to-end: one genuine RIFF/WAVE PCM16 file
@@ -3135,7 +3195,10 @@ def q_multimodal_audio_decode(spark, sf_dir):
     return synthetic_wav_decoded(_docs(spark, sf_dir))
 
 
-@query("bpe_tokenize_docs")  # no SQL oracle: iterative merge learning
+@query(
+    "bpe_tokenize_docs",  # no SQL oracle: iterative merge learning
+    eager=True,  # merge-table learning (bounded)
+)
 def q_bpe_tokenize(spark, sf_dir):
     """Real BPE tokenization end-to-end: merges learned from the corpus
     word-type table (Sennrich et al. 2016; deterministic count-desc /
@@ -4054,6 +4117,7 @@ def q_embedding_quantize(spark, sf_dir):
            CAST(sum(p) AS BIGINT) AS pixel_sum
     FROM px GROUP BY 1, 2, 3, 4
     """,
+    watch=True,  # real video demux + PNG decode, a bench headline query
 )
 def q_multimodal_video_frames(spark, sf_dir):
     """REAL video keyframe extraction end-to-end: one genuine
@@ -4421,107 +4485,3 @@ def q_vocab_growth(spark, sf_dir):
         .cast("bigint")
         .alias("vocab_size"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Round-5 registration of the round-4 staged queries (CLAUDE.md
-# checklist step 2): staged_queries is a leaf w.r.t. this module (its
-# shared oracle fragments come from lightsaber_spark.oracle_fragments),
-# so this import cannot form a cycle and always sees the fully
-# populated staged dicts. The merge is a pure addition — collisions are
-# rejected loudly rather than silently overriding a registered query.
-# ---------------------------------------------------------------------------
-from lightsaber_spark.queries import ORACLE_SQL as _ORACLE_SQL  # noqa: E402
-from lightsaber_spark.queries import SPARK_QUERIES as _SPARK_QUERIES  # noqa: E402
-from lightsaber_spark.staged_queries import (  # noqa: E402
-    STAGED_ORACLE_SQL,
-    STAGED_SPARK_QUERIES,
-)
-
-_clashes = set(STAGED_SPARK_QUERIES) & set(_SPARK_QUERIES)
-if _clashes:
-    raise RuntimeError(f"staged query names collide with registry: {_clashes}")
-_SPARK_QUERIES.update(STAGED_SPARK_QUERIES)
-_ORACLE_SQL.update(STAGED_ORACLE_SQL)
-
-
-# ---------------------------------------------------------------------------
-# Sweep-rotation priority (r16, VERDICT r15 next-round #1).
-#
-# The driver's correctness sweep checks the FIRST ~50 entries of the
-# registration dict per round (canonical 13 first, then staleness
-# tiers, registration order as the tie-break — __spark_entry__).
-# Adding the 4 r15 queries rotated 4 previously-green queries out of
-# the r15 sweep window (html_text_extraction, tpch_q8/q13/q15), which
-# the r15 verdict gates on re-vouching. Registration order is the
-# sanctioned lever ("Registration ORDER is part of the contract"), so
-# the list below is promoted to the front of the dicts: the 4
-# rotated-out queries first (the re-vouch targets), then the r15
-# sweep's members so consecutive sweeps overlap maximally. Exactly 37
-# names = the 50-slot window minus the canonical 13. The 4 r15-sweep
-# members NOT re-listed (theta_join_band_count,
-# json_props_stats_by_type, kmv_distinct_users_by_type,
-# window_top3_users) are the most-re-verified, longest-stable entries
-# in that window (7/7/6/6 green driver rows, implementations untouched
-# for many rounds) — the minimum-information sacrifice the 50-cap
-# forces when 4 queries must re-enter; the normal rotation re-covers
-# them in later rounds.
-#
-# This reorders ONLY the dict iteration order; no query is added,
-# removed, renamed or changed, and impl hashes (staleness) are
-# order-independent.
-# ---------------------------------------------------------------------------
-_SWEEP_PRIORITY = [
-    "tpch_q8_market_share",
-    "tpch_q13_custdist",
-    "tpch_q15_top_supplier",
-    "html_text_extraction",
-    "html_link_extraction",
-    "crawl_graph_domains",
-    "bpe_encode_frozen",
-    "quality_learned_classifier",
-    "sg1_ref_window_3600_1_minmax",
-    "gapfill_tumbling_count",
-    "range_join_ship_within_60d",
-    "salted_skew_join_counts",
-    "window_approx_distinct_users",
-    "window_kmv_distinct_users",
-    "cm_sketch_user_counts",
-    "noop_scan",
-    "window_value_profile",
-    "wavg_sliding_by_type",
-    "gapfill_sliding_count",
-    "tpch_q1_pricing_summary",
-    "rollup_revenue_flag_status",
-    "setop_engaged_non_buyers",
-    "window_distinct_users",
-    "tpch_q3_top_revenue",
-    "tpch_q18_big_orders",
-    "tpch_q19_disjunctive_revenue",
-    "cube_order_counts",
-    "lag_value_delta_per_user",
-    "tpch_q4_order_priority",
-    "anti_join_churned_customers",
-    "pivot_event_counts_by_day",
-    "ysb_longlong_keys",
-    "tpch_q5_revenue_by_nation",
-    "tpch_q10_returned_items",
-    "tpch_q14_promo_revenue",
-    "tpch_q6_banded_revenue",
-    "tpch_q7_volume_shipping",
-]
-
-
-def _promote_sweep_priority() -> None:
-    missing = [n for n in _SWEEP_PRIORITY if n not in _SPARK_QUERIES]
-    if missing:
-        raise RuntimeError(f"_SWEEP_PRIORITY names unknown queries: {missing}")
-    for d in (_SPARK_QUERIES, _ORACLE_SQL):
-        front = {n: d[n] for n in _SWEEP_PRIORITY if n in d}
-        rest = {n: v for n, v in d.items() if n not in front}
-        d.clear()
-        d.update(front)
-        d.update(rest)
-
-
-_promote_sweep_priority()

@@ -14,8 +14,8 @@ testdata columns for the reference fixture columns:
   measure (cpu, value…)     →  events.value
   campaigns static table    →  customer (broadcast dim)
 
-Every Spark query has a DuckDB oracle twin in ``ORACLE_SQL`` with
-identical column aliases.
+Every Spark query registers through ``registry.query`` with a DuckDB
+oracle twin carrying identical column aliases.
 
 Float determinism: SUM/AVG over doubles is order-dependent, and a
 distributed engine cannot fix the order — a rounding boundary can then
@@ -27,8 +27,6 @@ order-independent and stay direct.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 import pandas as pd  # noqa: F401 — required so pandas-UDF type hints resolve
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -45,20 +43,7 @@ from lightsaber_spark.operators import (
     window_topk,
 )
 from lightsaber_spark.operators.window_agg import gap_filled
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-SPARK_QUERIES: dict[str, QueryFn] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-    return deco
+from lightsaber_spark.registry import query
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,6 +101,7 @@ def _slide_expand(size: int, slide: int, src: str = "events", pred: str = "TRUE"
            count(*) AS n
     FROM x GROUP BY 1, 2
     """,
+    canonical=True,
 )
 def cm1(spark, sf_dir):
     """CM1 (ClusterMonitoring): sliding sum(value cents) per
@@ -143,6 +129,7 @@ def cm1(spark, sf_dir):
     SELECT window_start, user_id, CAST(sum(value_c) AS BIGINT) / 100.0 AS sum_value
     FROM x GROUP BY 1, 2
     """,
+    canonical=True,
 )
 def cm2(spark, sf_dir):
     """CM2: filtered (event_type) sliding sum per user_id, window 60/1
@@ -166,6 +153,7 @@ def cm2(spark, sf_dir):
            count(*) AS n
     FROM x GROUP BY 1
     """,
+    canonical=True,
 )
 def sg1(spark, sf_dir):
     """SG1 (SmartGrid): GLOBAL (ungrouped) sliding avg(value), pane-decomposed."""
@@ -216,6 +204,7 @@ def sg1(spark, sf_dir):
            CAST(wc AS BIGINT) AS n
     FROM win WHERE wc > 0 AND (pane - 3599) % 60 = 0
     """,
+    canonical=True,
 )
 def sg1_ref(spark, sf_dir):
     """SG1 at the reference's true window(3600,1), minute-aligned
@@ -262,6 +251,7 @@ def sg1_ref(spark, sf_dir):
            CAST(wc AS BIGINT) AS n
     FROM win WHERE wc > 0 AND (pane - 3599) % 60 = 0
     """,
+    watch=True,  # non-invertible MIN/MAX at ratio 60, a bench headline query
 )
 def sg1_ref_minmax(spark, sf_dir):
     """Non-invertible MIN/MAX at window(3600,1), minute-aligned starts
@@ -296,6 +286,7 @@ def sg1_ref_minmax(spark, sf_dir):
     FROM x GROUP BY 1, 2
     HAVING window_start % 300 = 0
     """,
+    canonical=True,
 )
 def cm1_ref(spark, sf_dir):
     """CM1 at the reference's true window(60,1) parameters, starts
@@ -324,6 +315,7 @@ def cm1_ref(spark, sf_dir):
            CAST(sum(value_c) AS BIGINT) / 100.0 / count(*) AS avg_value
     FROM e GROUP BY 1, 2, 3
     """,
+    canonical=True,
 )
 def sg2(spark, sf_dir):
     """SG2: tumbling avg grouped by (user_id, event_type) — one map-combinable aggregate."""
@@ -351,6 +343,7 @@ def sg2(spark, sf_dir):
            CAST(sum(value_c) AS BIGINT) / 100.0 / count(*) AS avg_value
     FROM x GROUP BY 1, 2
     """,
+    canonical=True,
 )
 def sg3(spark, sf_dir):
     """SG3: filtered sliding avg per user — selection pushed below the
@@ -384,6 +377,7 @@ def sg3(spark, sf_dir):
     FROM x GROUP BY 1, 2, 3
     HAVING CAST(sum(value_c) AS BIGINT) < 10000 * count(*)
     """,
+    canonical=True,
 )
 def lrb1(spark, sf_dir):
     """LRB1 (LinearRoad): derived expression group key + HAVING over
@@ -406,6 +400,76 @@ def lrb1(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
+# LRB2 — count-based (ROW_BASED) tumbling window
+# (ref: LRB2.cpp:22-111 — cnt GROUP BY keys, row window 1024/1024;
+#  WindowDefinition.h:13 ROW_BASED measure)
+# ---------------------------------------------------------------------------
+@query(
+    "lrb2_row_window_count",
+    f"""
+    WITH e AS (SELECT ts, event_id, event_type, {CENTS} AS value_c FROM events),
+    idx AS (
+      SELECT event_type, value_c,
+             (row_number() OVER (ORDER BY ts, event_id) - 1) // 1000 AS window_id
+      FROM e
+    )
+    SELECT window_id, event_type, count(*) AS n,
+           CAST(sum(value_c) AS BIGINT) / 100.0 AS sum_value
+    FROM idx GROUP BY 1, 2
+    """,
+    canonical=True,
+)
+def lrb2(spark, sf_dir):
+    """LRB2: COUNT-based (row) window — global two-pass row indexing,
+    no single-task sort."""
+    ev = _with_cents(_events(spark, sf_dir))
+    r = row_window_agg(
+        ev, ["ts", "event_id"], 1000, None,
+        [("count", None, "n"), ("sum", "value_c", "sum_c")],
+        ["event_type"],
+    )
+    return r.select(
+        "window_id", "event_type", "n", (F.col("sum_c") / 100.0).alias("sum_value")
+    )
+
+
+# ---------------------------------------------------------------------------
+# LRB3 — two-stage query DAG: windowed agg → row window over its output
+# (ref: applicationsWithCheckpoints/LinearRoadBenchmark/LRB3.cpp:677-738 —
+#  stage 1 windowed cnt, stage 2 row window 1024/1024; DAG wiring via
+#  Query::connectTo, src/utils/Query.h:111)
+# ---------------------------------------------------------------------------
+@query(
+    "lrb3_two_stage_dag",
+    """
+    WITH s1 AS (
+      SELECT (epoch_us(ts) // 3600000000) * 3600 AS window_start, user_id,
+             count(*) AS n
+      FROM events GROUP BY 1, 2
+    ),
+    idx AS (
+      SELECT n, (row_number() OVER (ORDER BY window_start, user_id) - 1) // 256
+               AS window_id
+      FROM s1
+    )
+    SELECT window_id, count(*) AS n_rows, CAST(sum(n) AS BIGINT) AS total_events
+    FROM idx GROUP BY 1
+    """,
+    canonical=True,
+)
+def lrb3(spark, sf_dir):
+    """LRB3: two chained windowed aggregations (the reference's
+    connectTo query DAG)."""
+    ev = _events(spark, sf_dir)
+    stage1 = windowed_agg(ev, "ts", 3600, 3600, [("count", None, "n")], ["user_id"])
+    return row_window_agg(
+        stage1, ["window_start", "user_id"], 256, None,
+        [("count", None, "n_rows"), ("sum", "n", "total_events")],
+        bucket_expr=F.floor(F.col("window_start") / 86400).cast("bigint"),
+    )
+
+
+# ---------------------------------------------------------------------------
 # ME1 — multi-aggregate global tumbling window
 # (ref: ManufacturingEquipment/ME1.cpp:20-33 — avg(mf01),avg(mf02),avg(mf03))
 # ---------------------------------------------------------------------------
@@ -420,6 +484,7 @@ def lrb1(spark, sf_dir):
            count(*) AS n
     FROM e GROUP BY 1
     """,
+    canonical=True,
 )
 def me1(spark, sf_dir):
     """ME1 (ManufacturingEquipment): multiple aggregates
@@ -452,6 +517,7 @@ def me1(spark, sf_dir):
     WHERE event_type = 'view'
     GROUP BY 1, 2
     """,
+    canonical=True,
 )
 def ysb(spark, sf_dir):
     """YSB (Yahoo): stream x static broadcast hash join then tumbling
@@ -487,6 +553,7 @@ def ysb(spark, sf_dir):
     SELECT window_start, user_id, n FROM c
     QUALIFY n = max(n) OVER (PARTITION BY window_start)
     """,
+    canonical=True,
 )
 def nbq5(spark, sf_dir):
     """NBQ5 (NEXMark): windowed count per key + post-window argmax
@@ -494,39 +561,6 @@ def nbq5(spark, sf_dir):
     ev = _events(spark, sf_dir)
     counts = windowed_agg(ev, "ts", 3600, 3600, [("count", None, "n")], ["user_id"])
     return post_window_argmax(counts, ["window_start"], "user_id", "n", keep_ties=True)
-
-
-# ---------------------------------------------------------------------------
-# LRB2 — count-based (ROW_BASED) tumbling window
-# (ref: LRB2.cpp:22-111 — cnt GROUP BY keys, row window 1024/1024;
-#  WindowDefinition.h:13 ROW_BASED measure)
-# ---------------------------------------------------------------------------
-@query(
-    "lrb2_row_window_count",
-    f"""
-    WITH e AS (SELECT ts, event_id, event_type, {CENTS} AS value_c FROM events),
-    idx AS (
-      SELECT event_type, value_c,
-             (row_number() OVER (ORDER BY ts, event_id) - 1) // 1000 AS window_id
-      FROM e
-    )
-    SELECT window_id, event_type, count(*) AS n,
-           CAST(sum(value_c) AS BIGINT) / 100.0 AS sum_value
-    FROM idx GROUP BY 1, 2
-    """,
-)
-def lrb2(spark, sf_dir):
-    """LRB2: COUNT-based (row) window — global two-pass row indexing,
-    no single-task sort."""
-    ev = _with_cents(_events(spark, sf_dir))
-    r = row_window_agg(
-        ev, ["ts", "event_id"], 1000, None,
-        [("count", None, "n"), ("sum", "value_c", "sum_c")],
-        ["event_type"],
-    )
-    return r.select(
-        "window_id", "event_type", "n", (F.col("sum_c") / 100.0).alias("sum_value")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1000,41 +1034,6 @@ def setop_engaged_non_buyers(spark, sf_dir):
         return ud.filter(F.col("event_type") == et).select("user_id", "day_id")
 
     return pairs("click").intersect(pairs("view")).subtract(pairs("purchase"))
-
-
-# ---------------------------------------------------------------------------
-# LRB3 — two-stage query DAG: windowed agg → row window over its output
-# (ref: applicationsWithCheckpoints/LinearRoadBenchmark/LRB3.cpp:677-738 —
-#  stage 1 windowed cnt, stage 2 row window 1024/1024; DAG wiring via
-#  Query::connectTo, src/utils/Query.h:111)
-# ---------------------------------------------------------------------------
-@query(
-    "lrb3_two_stage_dag",
-    """
-    WITH s1 AS (
-      SELECT (epoch_us(ts) // 3600000000) * 3600 AS window_start, user_id,
-             count(*) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    idx AS (
-      SELECT n, (row_number() OVER (ORDER BY window_start, user_id) - 1) // 256
-               AS window_id
-      FROM s1
-    )
-    SELECT window_id, count(*) AS n_rows, CAST(sum(n) AS BIGINT) AS total_events
-    FROM idx GROUP BY 1
-    """,
-)
-def lrb3(spark, sf_dir):
-    """LRB3: two chained windowed aggregations (the reference's
-    connectTo query DAG)."""
-    ev = _events(spark, sf_dir)
-    stage1 = windowed_agg(ev, "ts", 3600, 3600, [("count", None, "n")], ["user_id"])
-    return row_window_agg(
-        stage1, ["window_start", "user_id"], 256, None,
-        [("count", None, "n_rows"), ("sum", "n", "total_events")],
-        bucket_expr=F.floor(F.col("window_start") / 86400).cast("bigint"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2820,10 +2819,20 @@ def zorder_extents_q(spark, sf_dir):
 # run the chosen mechanism; the reference's novel part is the DECISION,
 # and that is what the oracle verifies bit-for-bit.
 # ---------------------------------------------------------------------------
-@query(
-    "adaptive_compression_plan",
-    None,  # oracle attached below (built by generator)
-)
+def _compression_oracle() -> str:
+    from lightsaber_spark.functions.compression import compression_plan_oracle_sql
+
+    src = (
+        "(SELECT event_id, CAST(user_id AS BIGINT) AS user_id, "
+        "epoch_us(ts) AS ts_us, CAST(round(value * 100) AS BIGINT) AS value_c, "
+        "('0x' || substr(md5(event_type), 1, 15))::BIGINT AS type_h FROM events)"
+    )
+    return compression_plan_oracle_sql(
+        src, ["user_id", "ts_us", "value_c", "type_h"], "event_id"
+    )
+
+
+@query("adaptive_compression_plan", _compression_oracle())
 def adaptive_compression_q(spark, sf_dir):
     """Codec plan for the persisted-events state columns: sequential
     ids → base-delta, a 150-value key → dictionary, near-monotone
@@ -2847,26 +2856,26 @@ def adaptive_compression_q(spark, sf_dir):
     )
 
 
-def _compression_oracle() -> str:
-    from lightsaber_spark.functions.compression import compression_plan_oracle_sql
+def _compression_replan_oracle() -> str:
+    from lightsaber_spark.functions.compression import (
+        compression_replan_oracle_sql,
+    )
 
     src = (
         "(SELECT event_id, CAST(user_id AS BIGINT) AS user_id, "
         "epoch_us(ts) AS ts_us, CAST(round(value * 100) AS BIGINT) AS value_c, "
         "('0x' || substr(md5(event_type), 1, 15))::BIGINT AS type_h FROM events)"
     )
-    return compression_plan_oracle_sql(
-        src, ["user_id", "ts_us", "value_c", "type_h"], "event_id"
+    return compression_replan_oracle_sql(
+        src,
+        ["user_id", "ts_us", "value_c", "type_h"],
+        "event_id",
+        batch_rows=256,
+        chunk_rows=64,
     )
 
 
-ORACLE_SQL["adaptive_compression_plan"] = _compression_oracle()
-
-
-@query(
-    "adaptive_compression_replan",
-    None,  # oracle attached below (built by generator)
-)
+@query("adaptive_compression_replan", _compression_replan_oracle())
 def adaptive_compression_replan_q(spark, sf_dir):
     """Runtime-adaptive codec RE-planning (CompressionMonitor.cpp):
     the ordered event stream segmented into 256-row micro-batches, the
@@ -2894,28 +2903,6 @@ def adaptive_compression_replan_q(spark, sf_dir):
         batch_rows=256,
         chunk_rows=64,
     )
-
-
-def _compression_replan_oracle() -> str:
-    from lightsaber_spark.functions.compression import (
-        compression_replan_oracle_sql,
-    )
-
-    src = (
-        "(SELECT event_id, CAST(user_id AS BIGINT) AS user_id, "
-        "epoch_us(ts) AS ts_us, CAST(round(value * 100) AS BIGINT) AS value_c, "
-        "('0x' || substr(md5(event_type), 1, 15))::BIGINT AS type_h FROM events)"
-    )
-    return compression_replan_oracle_sql(
-        src,
-        ["user_id", "ts_us", "value_c", "type_h"],
-        "event_id",
-        batch_rows=256,
-        chunk_rows=64,
-    )
-
-
-ORACLE_SQL["adaptive_compression_replan"] = _compression_replan_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -3014,10 +3001,25 @@ def cohort_retention_q(spark, sf_dir):
 # sketches (the join-cardinality-planning use of KMV: Beyer et al.
 # SIGMOD'07). Nothing pairwise ever touches raw rows.
 # ---------------------------------------------------------------------------
-@query(
-    "kmv_user_overlap_by_type",
-    None,  # oracle attached below (generator)
-)
+def _kmv_overlap_oracle() -> str:
+    from lightsaber_spark.functions.sketches import kmv_intersection_oracle_sql
+
+    est = kmv_intersection_oracle_sql("events", "event_type", "user_id", k=64)
+    return f"""
+    WITH est AS ({est}),
+    d AS (SELECT DISTINCT event_type, user_id FROM events),
+    ex AS (SELECT a.event_type AS set_a, b.event_type AS set_b,
+                  CAST(count(*) AS BIGINT) AS inter_exact
+           FROM d a JOIN d b
+             ON a.user_id = b.user_id AND a.event_type < b.event_type
+           GROUP BY 1, 2)
+    SELECT est.set_a, est.set_b, est.m_both, est.union_est, est.inter_est,
+           CAST(coalesce(ex.inter_exact, 0) AS BIGINT) AS inter_exact
+    FROM est LEFT JOIN ex USING (set_a, set_b)
+    """
+
+
+@query("kmv_user_overlap_by_type", _kmv_overlap_oracle())
 def kmv_user_overlap_q(spark, sf_dir):
     """For every pair of event types: the merged-sketch union estimate,
     the k-sample both-sides count, and the derived intersection
@@ -3054,27 +3056,6 @@ def kmv_user_overlap_q(spark, sf_dir):
         "inter_est",
         F.coalesce(F.col("inter_exact"), F.lit(0)).cast("bigint").alias("inter_exact"),
     )
-
-
-def _kmv_overlap_oracle() -> str:
-    from lightsaber_spark.functions.sketches import kmv_intersection_oracle_sql
-
-    est = kmv_intersection_oracle_sql("events", "event_type", "user_id", k=64)
-    return f"""
-    WITH est AS ({est}),
-    d AS (SELECT DISTINCT event_type, user_id FROM events),
-    ex AS (SELECT a.event_type AS set_a, b.event_type AS set_b,
-                  CAST(count(*) AS BIGINT) AS inter_exact
-           FROM d a JOIN d b
-             ON a.user_id = b.user_id AND a.event_type < b.event_type
-           GROUP BY 1, 2)
-    SELECT est.set_a, est.set_b, est.m_both, est.union_est, est.inter_est,
-           CAST(coalesce(ex.inter_exact, 0) AS BIGINT) AS inter_exact
-    FROM est LEFT JOIN ex USING (set_a, set_b)
-    """
-
-
-ORACLE_SQL["kmv_user_overlap_by_type"] = _kmv_overlap_oracle()
 
 
 # ---------------------------------------------------------------------------

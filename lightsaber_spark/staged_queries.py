@@ -1,17 +1,12 @@
-"""Queries originally STAGED during round 4 — REGISTERED since round 5.
+"""Sketch, graph, sampling, robust-statistics, corpus-analysis and
+media-hash queries of the catalog.
 
-Historical note: round-3 verdict item #1 froze the `__spark_entry__`
-registry for round 4 (the fronted block filled the driver's ~50-query
-sweep cap), so these were built, oracle-twinned, and pytest-verified
-here first (tests/test_staged_queries.py runs the driver-mirror
-compare at sf0.001) and merged at round-5 start. They ARE in the live
-registry today: ``pipeline_queries.py`` imports
-``STAGED_SPARK_QUERIES`` / ``STAGED_ORACLE_SQL`` and merges them into
-``SPARK_QUERIES`` / ``ORACLE_SQL``, so they sweep, hash-stale, and
-audit like any other query — only the module name is historical.
+They register through ``registry.query`` like every other query;
+``registry.catalog()`` imports this module after ``queries`` and
+``pipeline_queries``, whose shared DuckDB oracle fragments the MinHash
+calibration oracle reuses.
 
-Contents (15 queries, each filling a genuine gap in the 146-query
-catalog), by family:
+Contents (15 queries), by family:
 
 - Sketches: ``hll_distinct_users_by_type`` and
   ``window_hll_distinct_users`` — HyperLogLog with exact integer
@@ -43,29 +38,14 @@ catalog), by family:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lightsaber_spark.functions.hll import hll_distinct, hll_oracle_sql
 from lightsaber_spark.operators.iterative import pagerank, pagerank_oracle_sql
+from lightsaber_spark.pipeline_queries import H60, SHINGLES, TOKS, minhash_sig_parts
+from lightsaber_spark.registry import query
 from lightsaber_spark.session import load_tables
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
-
-STAGED_SPARK_QUERIES: dict[str, QueryFn] = {}
-STAGED_ORACLE_SQL: dict[str, str] = {}
-
-
-def staged_query(name: str, oracle: str | None = None):
-    def deco(fn: QueryFn) -> QueryFn:
-        STAGED_SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            STAGED_ORACLE_SQL[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -77,7 +57,7 @@ def staged_query(name: str, oracle: str | None = None):
 # ---------------------------------------------------------------------------
 
 
-@staged_query(
+@query(
     "hll_distinct_users_by_type",
     f"""
 WITH _est AS ({hll_oracle_sql("events", ["event_type"], "user_id", m=256,
@@ -162,7 +142,7 @@ def _pagerank_pairs(spark, sf_dir, materialize_dir=None):
     return build().localCheckpoint()
 
 
-@staged_query(
+@query(
     "pagerank_customer_supplier",
     f"""
 WITH _ranked AS ({pagerank_oracle_sql(_PR_EDGES_SQL, iterations=4)})
@@ -172,6 +152,7 @@ FROM _ranked
 ORDER BY rank_scaled DESC, node ASC
 LIMIT 20
 """,
+    eager=True,  # setup-only localCheckpoint
 )
 def pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 nodes by 4-iteration integer-scaled PageRank over the
@@ -230,7 +211,7 @@ def pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WPS_COND = "h % 20000 < LEAST(n_chars, 20000)"
 
 
-@staged_query(
+@query(
     "weighted_poisson_sample_by_source",
     f"""
 WITH _h AS (
@@ -279,7 +260,7 @@ def weighted_poisson_sample_by_source(
 # ---------------------------------------------------------------------------
 
 
-@staged_query(
+@query(
     "mad_outlier_bounds_by_type",
     """
 WITH _c AS (
@@ -401,7 +382,7 @@ def mad_outlier_bounds_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 # side on identical windows.
 # ---------------------------------------------------------------------------
 
-@staged_query(
+@query(
     "window_hll_distinct_users",
     hll_oracle_sql(
         "(SELECT (epoch_us(ts) // 21600000000) * 21600 AS window_start, "
@@ -477,7 +458,7 @@ def _mixture_targets_df(docs: DataFrame) -> DataFrame:
     )
 
 
-@staged_query(
+@query(
     "mixture_temperature_targets",
     f"""
 WITH {_MIX_TARGET_CTES}
@@ -529,7 +510,7 @@ FROM pairs JOIN sizes sa ON source_a = sa.source
 """
 
 
-@staged_query("source_ngram_overlap_matrix", _SRC_OVERLAP_ORACLE)
+@query("source_ngram_overlap_matrix", _SRC_OVERLAP_ORACLE)
 def source_ngram_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-gram Jaccard similarity between every pair of document sources
     (shared-shingle equi-join over the DISTINCT per-source shingle set —
@@ -589,7 +570,7 @@ def source_ngram_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_query(
+@query(
     "mixture_apply_quotas",
     f"""
 WITH {_MIX_TARGET_CTES},
@@ -660,12 +641,6 @@ def _minhash_calibration_oracle(
     n_hashes: int = 32, bands: int = 8, seed: int = 42
 ) -> str:
     from lightsaber_spark.functions.dedup import X_BITS
-    from lightsaber_spark.oracle_fragments import (
-        H60,
-        SHINGLES,
-        TOKS,
-        minhash_sig_parts,
-    )
 
     consts, r, mins, band_cols, stacked = minhash_sig_parts(
         n_hashes, bands, seed
@@ -710,7 +685,7 @@ def _minhash_calibration_oracle(
     """
 
 
-@staged_query("minhash_jaccard_calibration", _minhash_calibration_oracle())
+@query("minhash_jaccard_calibration", _minhash_calibration_oracle())
 def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32) estimate vs exact 3-gram Jaccard on every LSH(8-band)
     candidate pair — estimator-calibration table for the LSH retrieval
@@ -768,7 +743,7 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_query(
+@query(
     "ohlc_bars_by_type",
     """
 WITH _b AS (
@@ -839,7 +814,7 @@ _RI_CHECKS = [
 ]
 
 
-@staged_query(
+@query(
     "referential_integrity_audit",
     "\nUNION ALL\n".join(
         f"""SELECT '{name}' AS check_name,
@@ -889,7 +864,7 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_query(
+@query(
     "event_transition_matrix",
     """
 WITH _o AS (
@@ -937,7 +912,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged_query(
+@query(
     "lateness_profile",
     """
 WITH _a AS (
@@ -1122,7 +1097,11 @@ fp AS (SELECT doc_id, CAST({fold} AS BIGINT) AS ahash FROM bits GROUP BY 1),
 {_spectrum_sql_tail("ahash")}"""
 
 
-@staged_query("media_ahash_spectrum", _media_ahash_oracle())
+@query(
+    "media_ahash_spectrum",
+    _media_ahash_oracle(),
+    watch=True,  # real PNG codec + perceptual hash, a bench headline query
+)
 def media_ahash_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-dup spectrum over the REAL codec pipeline:
     encode each document id as a genuine PNG (multimodal.py), decode it
@@ -1191,7 +1170,11 @@ fp AS (
 {_spectrum_sql_tail("fingerprint")}"""
 
 
-@staged_query("audio_fingerprint_spectrum", _audio_fp_oracle())
+@query(
+    "audio_fingerprint_spectrum",
+    _audio_fp_oracle(),
+    watch=True,  # real WAV codec + fingerprint, a bench headline query
+)
 def audio_fingerprint_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Energy-delta fingerprint pair spectrum over the REAL WAV codec:
     encode each doc id as a genuine RIFF/WAVE clip, decode it with the

@@ -212,12 +212,12 @@ def impl_hash(fn, oracle: str | None = None) -> str:
 
 def current_hashes() -> dict[str, str]:
     """``impl_hash`` for every registered catalog query."""
-    import lightsaber_spark.pipeline_queries  # noqa: F401 — registers entries
-    from lightsaber_spark.queries import ORACLE_SQL, SPARK_QUERIES
+    from lightsaber_spark.registry import catalog
 
+    spark_queries, oracles = catalog()
     return {
-        name: impl_hash(fn, ORACLE_SQL.get(name))
-        for name, fn in SPARK_QUERIES.items()
+        name: impl_hash(fn, oracles.get(name))
+        for name, fn in spark_queries.items()
     }
 
 

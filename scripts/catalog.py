@@ -2,7 +2,8 @@
 """Generate CATALOG.md — one row per registered query: oracle kind,
 last driver-green round, and the first docstring sentence (the query's
 semantics + scale-design note live in the docstrings; this surfaces
-them in one navigable table).
+them in one navigable table). Rows follow registration order, not the
+driver's sweep order, so a rotating sweep does not reorder the file.
 
 Usage: python scripts/catalog.py [--write CATALOG.md]
 """
@@ -18,10 +19,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     import __spark_entry__ as entrymod
 
+    from lightsaber_spark import registry
     from lightsaber_spark.staleness import current_hashes, is_vouched, recorded_hashes
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    queries, oracles = registry.catalog()
     last = entrymod._last_green_round()
     cur, rec = current_hashes(), recorded_hashes()
 
@@ -38,7 +39,7 @@ def main() -> int:
             green = f"r{last[name]} (stale — rewritten since)"
         else:
             green = f"r{last[name]}"
-        canon = " ★" if name in entrymod._CANONICAL else ""
+        canon = " ★" if name in registry.CANONICAL else ""
         rows.append((name + canon, oracle, green, first))
 
     lines = [

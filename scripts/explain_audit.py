@@ -1,16 +1,14 @@
 #!/usr/bin/env python
 """Plan-quality audit: dump the formatted physical plan of every
-queries() entry and flag scale hazards (NESTED_LOOP / NO_PUSHDOWN /
+registered query and flag scale hazards (NESTED_LOOP / NO_PUSHDOWN /
 SINGLE_PART — see lightsaber_spark/plan_audit.py for the definitions;
 the flag logic is shared with tests/test_plan_contracts.py).
 
-Usage: python scripts/explain_audit.py [sf_dir] [--staged]
-                                       [--write PLANS.md]
+Usage: python scripts/explain_audit.py [sf_dir] [--write PLANS.md]
 
-``--staged`` is a bare flag: it audits
-lightsaber_spark/staged_queries.py (the round-5 queue held out of the
-frozen registry) instead of the registered catalog, so plan evidence
-exists before registration; pair it with ``--write STAGED_PLANS.md``.
+Queries are audited in registration order, and the session pins 4
+shuffle partitions, so a regenerated PLANS.md does not depend on the
+host's core count or on the driver's sweep order.
 """
 
 from __future__ import annotations
@@ -21,20 +19,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def audit(sf_dir: str, write_path: str | None, staged: bool = False) -> int:
-    from lightsaber_spark import get_spark
+def audit(sf_dir: str, write_path: str | None) -> int:
+    from lightsaber_spark import get_spark, registry
     from lightsaber_spark.plan_audit import codegen_flags, formatted_plan, plan_flags
 
-    if staged:
-        from lightsaber_spark.staged_queries import STAGED_SPARK_QUERIES
-
-        queries = dict(STAGED_SPARK_QUERIES)
-    else:
-        import __spark_entry__ as entrymod
-
-        queries = entrymod.queries()
-
-    spark = get_spark(app_name="plan-audit")
+    queries, _ = registry.catalog()
+    spark = get_spark(app_name="plan-audit", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
 
     sections = []
@@ -67,12 +57,10 @@ def audit(sf_dir: str, write_path: str | None, staged: bool = False) -> int:
 
 
 if __name__ == "__main__":
-    staged = "--staged" in sys.argv
-    argv = [a for a in sys.argv if a != "--staged"]
-    args = [a for a in argv[1:] if not a.startswith("--")]
+    args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     write_path = None
-    for i, a in enumerate(argv):
+    for i, a in enumerate(sys.argv):
         if a == "--write":
-            write_path = argv[i + 1]
-    sys.exit(1 if audit(sf_dir, write_path, staged=staged) else 0)
+            write_path = sys.argv[i + 1]
+    sys.exit(1 if audit(sf_dir, write_path) else 0)

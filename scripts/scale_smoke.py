@@ -66,8 +66,6 @@ QUERIES = [
     "text_bm25_topk",
     "profile_events_columns",
     "multimodal_audio_decode_real",
-    # round-4 staged queries, registered in round 5 — keep the scale
-    # evidence regenerating with the registry (replaces STAGED_SCALE)
     "hll_distinct_users_by_type",
     "pagerank_customer_supplier",
     "mad_outlier_bounds_by_type",
@@ -143,22 +141,16 @@ def build_scaled(base: str, out: str, k: int, only_tables=None) -> None:
     con.close()
 
 
-def run(sf_dir: str, spark, names, count_rows: bool = False,
-        staged: bool = False):
+def run(sf_dir: str, spark, names, count_rows: bool = False):
     """Per query: noop-sink wall time, and (optionally, as a SEPARATE
     untimed pass so the measurement stays the same plan as always) the
     output ROW COUNT — the evidence that super-linear runtime ratios on
     pair-emitting queries are output-bound, not machinery-bound."""
     from lightsaber_spark.functions.dedup import release_shingle_caches
 
-    if staged:
-        from lightsaber_spark.staged_queries import STAGED_SPARK_QUERIES
+    import __spark_entry__ as entrymod
 
-        qmap = dict(STAGED_SPARK_QUERIES)
-    else:
-        import __spark_entry__ as entrymod
-
-        qmap = entrymod.queries()
+    qmap = entrymod.queries()
     secs: dict[str, float] = {}
     rows: dict[str, int] = {}
     for name in names:
@@ -190,9 +182,6 @@ def main() -> None:
     ap.add_argument("--write", default=None)
     ap.add_argument("--queries", default=None,
                     help="comma-separated subset of QUERIES to run")
-    ap.add_argument("--staged", action="store_true",
-                    help="measure lightsaber_spark/staged_queries.py "
-                         "(the round-5 queue) instead of the registry")
     ap.add_argument("--tables", default=None,
                     help="comma-separated fact tables to replicate "
                          "(others copied at base scale) — keeps huge-K "
@@ -200,15 +189,7 @@ def main() -> None:
     ap.add_argument("--append", action="store_true",
                     help="append a section to --write instead of rewriting")
     args = ap.parse_args()
-    if args.staged:
-        from lightsaber_spark.staged_queries import STAGED_SPARK_QUERIES
-
-        queries = (
-            args.queries.split(",") if args.queries
-            else list(STAGED_SPARK_QUERIES)
-        )
-    else:
-        queries = args.queries.split(",") if args.queries else QUERIES
+    queries = args.queries.split(",") if args.queries else QUERIES
     only_tables = set(args.tables.split(",")) if args.tables else None
 
     t0 = time.time()
@@ -230,11 +211,9 @@ def main() -> None:
     # scaled on the already-warm JVM — both measured passes warm.
     # Output-row counts run as separate untimed passes, so the timed
     # plan is unchanged vs previous rounds.
-    run(args.base, spark, queries, staged=args.staged)
-    base_t, base_n = run(args.base, spark, queries, count_rows=True,
-                         staged=args.staged)
-    scaled_t, scaled_n = run(args.out, spark, queries, count_rows=True,
-                             staged=args.staged)
+    run(args.base, spark, queries)
+    base_t, base_n = run(args.base, spark, queries, count_rows=True)
+    scaled_t, scaled_n = run(args.out, spark, queries, count_rows=True)
 
     rows = []
     for n in queries:
@@ -306,7 +285,7 @@ def main() -> None:
         "k": args.k, "base": base_t, "scaled": scaled_t,
         "base_rows": base_n, "scaled_rows": scaled_n, "build_s": build_s,
     }
-    json_path = "STAGED_SCALE.json" if args.staged else "SCALE.json"
+    json_path = "SCALE.json"
     if args.append and os.path.exists(json_path):
         with open(json_path) as f:
             prior = json.load(f)

@@ -3,39 +3,23 @@ registered query must trigger NO distributed work — driver actions at
 build time are the anti-pattern that turns a declarative catalog into
 hidden eager jobs at 100 TB. The only allowed build-time jobs are
 1-task parquet footer/schema reads (load_tables) and the documented
-bounded-eager whitelist below.
+bounded-eager queries registered with ``eager=True`` (each a bounded
+class — k-centroid collect, merge-table learn, iterative CC/pagerank
+localCheckpoint, frozen-state reload, or a composition that calls one
+of those; the reason sits on each decorator).
 
 Before r14 this rule was prose + review; a per-query job-group probe
 makes it a failing test. Method: each build runs under its own Spark
 job group; any job in that group with MORE than one task is a real
-distributed action (schema reads are single-task), so a non-whitelisted
-query with one fails."""
+distributed action (schema reads are single-task), so a query not flagged
+``eager`` with one fails."""
 
 from __future__ import annotations
 
 import pytest
 
+from lightsaber_spark import registry
 from tests.conftest import SF_DIR
-
-# CLAUDE.md "Keep queries lazy" documented exceptions — every entry is
-# a bounded eager class (k-centroid collect, merge-table learn,
-# iterative CC/pagerank localCheckpoint, frozen-state reload, or a
-# composition that calls one of those).
-_EAGER_BUILD_WHITELIST = {
-    "dedup_duplicate_groups",            # iterative CC, localCheckpoint/round
-    "dedup_fuzzy_keep_representatives",  # calls duplicate_groups
-    "sim_ivf_topk",                      # collects the tiny centroid set
-    "sim_ivf_kmeans_topk",               # k-means fit (bounded k)
-    "dedup_semantic_groups",             # same bounded centroid class
-    "dedup_semantic_delta",              # frozen corpus fit reuse
-    "dedup_embedding_cosine",            # centroid-bucketed GEMM setup
-    "dedup_embedding_lsh",               # shared similarity setup
-    "bpe_tokenize_docs",                 # merge-table learning (bounded)
-    "pagerank_customer_supplier",        # setup-only localCheckpoint
-    "pipeline_quality_dedup_split_pack", # composes duplicate_groups
-    "quality_learned_classifier",        # perceptron fit: rounds+1
-                                         # one-row collects (r15)
-}
 
 
 def test_catalog_builds_are_lazy(spark):
@@ -45,7 +29,7 @@ def test_catalog_builds_are_lazy(spark):
     tracker = sc.statusTracker()
     offenders = []
     for name, fn in entrymod.queries().items():
-        if name in _EAGER_BUILD_WHITELIST:
+        if name in registry.EAGER:
             continue
         group = f"lazy-{name}"
         sc.setJobGroup(group, name)
@@ -65,13 +49,13 @@ def test_catalog_builds_are_lazy(spark):
             if tasks > 1:
                 offenders.append(f"{name}: build job {j} ran {tasks} tasks")
     assert not offenders, (
-        "non-whitelisted queries ran distributed work at BUILD time "
+        "queries not flagged eager ran distributed work at BUILD time "
         "(CLAUDE.md lazy invariant):\n" + "\n".join(offenders)
     )
 
 
 def test_whitelisted_eager_builds_are_bounded(spark):
-    """The whitelist itself stays honest: every documented eager build
+    """The eager flag itself stays honest: every documented eager build
     must finish its build-time jobs over the testdata without touching
     a job bigger than the input partition count (a bounded collect or
     checkpoint, never a blow-up)."""
@@ -81,7 +65,7 @@ def test_whitelisted_eager_builds_are_bounded(spark):
     tracker = sc.statusTracker()
     default_par = sc.defaultParallelism
     queries = entrymod.queries()
-    for name in sorted(_EAGER_BUILD_WHITELIST):
+    for name in sorted(registry.EAGER):
         group = f"eager-{name}"
         sc.setJobGroup(group, name)
         try:

@@ -988,10 +988,10 @@ def test_semdedup_corpus_state_materialize_dir(spark, tmp_path, monkeypatch):
 
     import lightsaber_spark.pipeline_queries as pq
     from lightsaber_spark.functions.dedup import release_shingle_caches
-    from lightsaber_spark.queries import SPARK_QUERIES
+    from lightsaber_spark.registry import catalog
 
     sf = "/root/testdata/sf0.001"
-    q = SPARK_QUERIES["dedup_semantic_delta"]
+    q = catalog()[0]["dedup_semantic_delta"]
 
     def rows():
         out = {

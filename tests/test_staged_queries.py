@@ -1,9 +1,7 @@
-"""Driver-mirror verification for the STAGED round-5 queries
-(lightsaber_spark/staged_queries.py) — same compare as
-tests/test_oracle_parity.py, run before the queries enter
-``__spark_entry__`` (registry frozen for round 4 per the round-3
-verdict), plus unit pins for the new engine pieces
-(functions/hll.py, operators/iterative.py)."""
+"""Unit pins for the engine pieces behind the queries of
+``lightsaber_spark/staged_queries.py`` (functions/hll.py,
+operators/iterative.py, the MAD query), plus their share of the
+catalog-wide oracle compare."""
 
 from __future__ import annotations
 
@@ -11,66 +9,20 @@ import math
 
 import pytest
 
-from lightsaber_spark.staged_queries import (
-    STAGED_ORACLE_SQL,
-    STAGED_SPARK_QUERIES,
-)
+from lightsaber_spark import registry
 from tests.conftest import SF_DIR
+from tests.test_oracle_parity import check_oracle_parity
+
+_STAGED = sorted(
+    n for n, fn in registry.catalog()[0].items()
+    if fn.__module__ == "lightsaber_spark.staged_queries"
+)
 
 
-def _canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-    def key(r):
-        return tuple((x is None, repr(x)) for x in r)
-
-    return sorted([tuple(r[i] for i in order) for r in rows], key=key)
-
-
-def _cell_eq(x, y):
-    # The real driver hashes values EXACTLY; an ulp of cross-engine
-    # drift would pass isclose here yet fail the sweep. The staged
-    # designs claim bit-identical floats — hold them to it.
-    if isinstance(x, float) or isinstance(y, float):
-        if x is None or y is None:
-            return x is y
-        return repr(float(x)) == repr(float(y))
-    return x == y
-
-
-@pytest.mark.parametrize("name", sorted(STAGED_SPARK_QUERIES))
+@pytest.mark.parametrize("name", _STAGED)
 def test_staged_oracle_parity(name, spark, duck):
-    sdf = STAGED_SPARK_QUERIES[name](spark, SF_DIR)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-    assert name in STAGED_ORACLE_SQL, f"{name}: staged without an oracle"
-    rel = duck.execute(STAGED_ORACLE_SQL[name])
-    d_cols = [d[0] for d in rel.description]
-    d_rows = rel.fetchall()
-
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: column mismatch {sorted(s_cols)} vs {sorted(d_cols)}"
-    )
-    a, b = _canon(s_rows, s_cols), _canon(d_rows, d_cols)
-    assert len(a) == len(b) > 0, f"{name}: rowcount {len(a)} vs {len(b)}"
-    for i, (ra, rb) in enumerate(zip(a, b)):
-        for c, (x, y) in zip(sorted(s_cols), zip(ra, rb)):
-            assert _cell_eq(x, y), (
-                f"{name}: row {i} col {c}: spark={x!r} duck={y!r}\n"
-                f"  spark row: {ra}\n  duck row:  {rb}"
-            )
-
-
-def test_staged_no_hugeint_or_decimal_outputs(duck):
-    """CLAUDE.md type-sensitivity audit, applied to the staged oracles
-    before they can ever reach the driver."""
-    bad = []
-    for name, sql in STAGED_ORACLE_SQL.items():
-        desc = duck.execute(f"DESCRIBE ({sql})").fetchall()
-        for col, typ, *_ in desc:
-            if "HUGEINT" in typ or "DECIMAL" in typ:
-                bad.append((name, col, typ))
-    assert not bad, f"type-unsafe oracle outputs: {bad}"
+    """The same check as ``test_oracle_parity[name]``."""
+    check_oracle_parity(name, spark, duck)
 
 
 # ---------------------------------------------------------------------------
@@ -285,15 +237,12 @@ def test_pagerank_matches_python_model(spark):
 )
 def test_mad_edge_cases(spark, tmp_path, vals, n_outliers):
     """Degenerate shapes (singleton, constant, even-count, zero-MAD
-    spike) through the full staged query path via a tiny parquet dir."""
+    spike) through the full query path via a tiny parquet dir."""
     import pathlib
 
     import duckdb
 
-    from lightsaber_spark.staged_queries import (
-        STAGED_ORACLE_SQL,
-        mad_outlier_bounds_by_type,
-    )
+    from lightsaber_spark.staged_queries import mad_outlier_bounds_by_type
 
     d = tmp_path / f"sf_mad_{len(vals)}_{n_outliers}"
     d.mkdir()
@@ -311,7 +260,7 @@ def test_mad_edge_cases(spark, tmp_path, vals, n_outliers):
     assert len(got) == 1 and got[0]["n_outliers"] == n_outliers
 
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{d}/events.parquet'")
-    rel = con.execute(STAGED_ORACLE_SQL["mad_outlier_bounds_by_type"])
+    rel = con.execute(registry.ORACLE_SQL["mad_outlier_bounds_by_type"])
     cols = [dd[0] for dd in rel.description]
     want = rel.fetchall()
     assert len(want) == 1
@@ -348,25 +297,3 @@ def test_hll_small_m_cross_engine(spark, duck):
         )
     )
     assert got == want
-
-
-def test_round5_registration():
-    """Round-5 registration landed (CLAUDE.md checklist step 2) and was
-    a pure addition: every staged query is registered with its OWN
-    callable (nothing overridden either direction), every staged query
-    carries an oracle, and the no-oracle-by-design count stays at the
-    documented two. Regardless of import order (staged_queries has no
-    back-edge into pipeline_queries), the merge sees all 15 entries."""
-    import lightsaber_spark.pipeline_queries  # noqa: F401 — registers
-    from lightsaber_spark.queries import ORACLE_SQL, SPARK_QUERIES
-
-    assert len(STAGED_SPARK_QUERIES) == 15
-    for name, fn in STAGED_SPARK_QUERIES.items():
-        assert SPARK_QUERIES.get(name) is fn, f"{name}: not registered as-is"
-        assert ORACLE_SQL.get(name) == STAGED_ORACLE_SQL[name]
-    assert set(STAGED_ORACLE_SQL) == set(STAGED_SPARK_QUERIES)
-    # exactly the two documented no-oracle queries survive the merge
-    assert set(SPARK_QUERIES) - set(ORACLE_SQL) == {
-        "bpe_tokenize_docs",
-        "window_approx_distinct_users",
-    }

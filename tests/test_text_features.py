@@ -521,12 +521,12 @@ def test_bpe_tokenize_docs_content_pin(spark, tables):
 
     from lightsaber_spark.functions.text import bpe_encode_word, learn_bpe_merges
     from lightsaber_spark.pipeline_queries import _docs
-    from lightsaber_spark.queries import SPARK_QUERIES
+    from lightsaber_spark.registry import catalog
     from tests.conftest import SF_DIR
 
     out = {
         r["doc_id"]: (r["n_word_tokens"], r["n_bpe_tokens"], r["tokens_hash"])
-        for r in SPARK_QUERIES["bpe_tokenize_docs"](spark, SF_DIR).collect()
+        for r in catalog()[0]["bpe_tokenize_docs"](spark, SF_DIR).collect()
     }
     docs = {r["doc_id"]: r["text"] for r in tables["documents"].collect()}
     assert set(out) == set(docs)
