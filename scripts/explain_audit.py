@@ -6,9 +6,9 @@ the flag logic is shared with tests/test_plan_contracts.py).
 
 Usage: python scripts/explain_audit.py [sf_dir] [--write PLANS.md]
 
-Queries are audited in registration order, and the session pins 4
-shuffle partitions, so a regenerated PLANS.md does not depend on the
-host's core count or on the driver's sweep order.
+Queries are audited in registration order on a local[4] session with
+4 shuffle partitions, so a regenerated PLANS.md depends neither on the
+host's core count nor on the driver's sweep order.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ def audit(sf_dir: str, write_path: str | None) -> int:
     from lightsaber_spark.plan_audit import codegen_flags, formatted_plan, plan_flags
 
     queries, _ = registry.catalog()
-    spark = get_spark(app_name="plan-audit", shuffle_partitions=4)
+    spark = get_spark(app_name="plan-audit", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
 
     sections = []
