@@ -25,6 +25,20 @@ def test_staged_oracle_parity(name, spark, duck):
     check_oracle_parity(name, spark, duck)
 
 
+def test_staged_no_hugeint_or_decimal_outputs(duck):
+    """The HUGEINT/DECIMAL type audit of
+    ``test_no_hugeint_or_decimal_oracle_outputs``, applied to the staged
+    module's oracles."""
+    oracles = registry.catalog()[1]
+    bad = []
+    for name in _STAGED:
+        desc = duck.execute(f"DESCRIBE ({oracles[name]})").fetchall()
+        for col, typ, *_ in desc:
+            if "HUGEINT" in typ or "DECIMAL" in typ:
+                bad.append((name, col, typ))
+    assert not bad, f"type-unsafe oracle outputs: {bad}"
+
+
 # ---------------------------------------------------------------------------
 # functions/hll.py unit pins
 # ---------------------------------------------------------------------------
